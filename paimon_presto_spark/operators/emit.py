@@ -28,8 +28,8 @@ with emit finally first-class:
    shard (salted md5 — the ``split_assign_hash`` convention, so a
    sequence's shard NEVER changes as the corpus grows), and shard
    groups are appended to a partitioned table-format table in a FIXED
-   deterministic order, each commit an atomic snapshot (``table.py``
-   O_EXCL swap) stamped with a monotone **commit identifier** — Paimon's
+   deterministic order, each commit an atomic snapshot (``tablemeta.py``
+   exclusive snapshot create) stamped with a monotone **commit identifier** — Paimon's
    sink resume contract (``commitIdentifier`` in real Paimon snapshots;
    the Flink sink's checkpoint id). A re-run reads the latest committed
    identifier from table METADATA and continues from the next group, so

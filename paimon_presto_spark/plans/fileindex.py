@@ -145,9 +145,9 @@ def translate_entry_metadata(
     (a→b then c→a) re-binds a name to different data, so testing metadata
     by name alone can wrongly skip a file (lost rows). Translating via
     ids keeps skipping working for renamed columns and degrades re-bound
-    names to no-skip — never wrong-skip. Shared by the TableScan planner
-    and the Python DataSource (the single place the rename semantics
-    live).
+    names to no-skip — never wrong-skip. Used by the one scan planner,
+    ``tablemeta.TableMeta.plan_entries``, that both front ends share (the
+    single place the rename semantics live).
     """
     stats: dict = {}
     idx: dict = {}

@@ -61,6 +61,7 @@ class Predicate:
 
 import datetime as _dt
 import re as _re
+from decimal import Decimal as _Decimal
 
 _TS_RE = _re.compile(r"^\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2})?")
 
@@ -88,6 +89,16 @@ def _stat(stats, col):
     return _norm_val(s.get("min")), _norm_val(s.get("max")), s.get("null_count")
 
 
+def _as_float_if_mixed(lo, hi, v):
+    """A decimal compared with a float compares as doubles in Spark, so a
+    Decimal bound meets a float literal (or a float bound a Decimal
+    literal) as floats; Python's exact mixed comparison would disagree
+    with the filter at the boundary and skip a matching file."""
+    if any(isinstance(x, float) for x in (lo, hi, v)):
+        return tuple(float(x) if isinstance(x, _Decimal) else x for x in (lo, hi, v))
+    return lo, hi, v
+
+
 @dataclass(frozen=True)
 class Comparison(Predicate):
     """=, <, <=, >, >= against a literal."""
@@ -111,7 +122,7 @@ class Comparison(Predicate):
         lo, hi, _ = _stat(stats, self.column)
         if lo is None or hi is None:
             return True  # no stats → cannot skip
-        v = _norm_val(self.value)
+        lo, hi, v = _as_float_if_mixed(lo, hi, _norm_val(self.value))
         try:
             if self.op == "eq":
                 return lo <= v <= hi
@@ -167,7 +178,12 @@ class In(Predicate):
         if lo is None or hi is None:
             return True
         try:
-            return any(lo <= _norm_val(v) <= hi for v in self.values)
+            return any(
+                a <= x <= b
+                for a, b, x in (
+                    _as_float_if_mixed(lo, hi, _norm_val(v)) for v in self.values
+                )
+            )
         except TypeError:
             return True
 

@@ -39,6 +39,8 @@ from typing import Any, Callable, Iterator
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from paimon_presto_spark.tablemeta import _plain
+
 MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
 _BLOCK_ROWS = 4096
@@ -728,22 +730,13 @@ def write_avro_partitioned(
         ]
     )
 
-    def _plain_stat(v):
-        import datetime
-        import decimal
-
+    def _native(v):
         import numpy as np
 
         if isinstance(v, np.generic):
             v = v.item()
-        if isinstance(v, decimal.Decimal):
-            return float(v)
-        if isinstance(v, (pd.Timestamp, datetime.datetime, datetime.date)):
-            if isinstance(v, pd.Timestamp):
-                v = v.to_pydatetime()
-            return v.isoformat()
-        if isinstance(v, bytes):
-            return None
+        if isinstance(v, pd.Timestamp):
+            v = v.to_pydatetime()
         return v
 
     def write_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -800,7 +793,7 @@ def write_avro_partitioned(
                     )
                     a["null_count"] += int(col.isna().sum())
                     if len(nn):
-                        mn, mx = _plain_stat(nn.min()), _plain_stat(nn.max())
+                        mn, mx = _native(nn.min()), _native(nn.max())
                         if mn is not None:
                             a["min"] = mn if a["min"] is None else min(a["min"], mn)
                         if mx is not None:
@@ -811,7 +804,14 @@ def write_avro_partitioned(
             {
                 "path": list(writers),
                 "n_rows": [counts[p] for p in writers],
-                "stats": [json.dumps(stats[p]) for p in writers],
+                # min/max compared as native values, stored as JSON
+                "stats": [
+                    json.dumps({
+                        c: {**a, "min": _plain(a["min"]), "max": _plain(a["max"])}
+                        for c, a in stats[p].items()
+                    })
+                    for p in writers
+                ],
             }
         )
 

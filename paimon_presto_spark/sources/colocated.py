@@ -47,7 +47,6 @@ vectors and all. Missing right buckets yield null-extended rows under
 from __future__ import annotations
 
 import json
-import os
 from collections.abc import Sequence
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
@@ -56,9 +55,7 @@ from paimon_presto_spark.sources.datasource import (
     PaimonPartition,
     PaimonReader,
     _arrow_type,
-    _load_schema,
-    _manifest_entries,
-    dv_index_map,
+    bucket_splits,
     read_split_arrow,
     spark_ddl_type,
 )
@@ -75,17 +72,20 @@ def _side_options(options: dict, side: str) -> dict:
     return out
 
 
-def _side_schema(options: dict, side: str) -> dict:
-    """The SNAPSHOT-resolved schema for one side — honors the same
+def _side_snapshot(options: dict, side: str):
+    """(metadata core, pinned snapshot or None) for one side, honoring the
     ``<side>_snapshot`` / ``<side>_tag`` / ``<side>_as-of-timestamp-ms``
-    time-travel options the planner does, so the declared read schema can
-    never diverge from the batches the splits emit under schema
-    evolution."""
+    time-travel options the way ``PaimonReader`` does."""
     r = PaimonReader(_side_options(options, side))
-    snap = r._snapshot()
-    if snap is None:
-        return _load_schema(r.meta)
-    return _load_schema(r.meta, snap["schema_id"])
+    return r.core, r.core.resolve_snapshot(r.snapshot_id, r.as_of_ms, r.tag)
+
+
+def _side_schema(options: dict, side: str) -> dict:
+    """The SNAPSHOT-resolved schema for one side, so the declared read
+    schema can never diverge from the batches the splits emit under
+    schema evolution."""
+    core, snap = _side_snapshot(options, side)
+    return core.schema(snap.schema_id if snap else None).to_json()
 
 
 def _plan_side(options: dict, side: str, rename: dict[str, str] | None = None):
@@ -95,29 +95,19 @@ def _plan_side(options: dict, side: str, rename: dict[str, str] | None = None):
     names before the group key is serialized, so the two sides' keys
     compare under one naming (``right_on`` keys may differ from
     ``left_on``)."""
-    r = PaimonReader(_side_options(options, side))
-    snap = r._snapshot()
+    core, snap = _side_snapshot(options, side)
     if snap is None:
-        return _load_schema(r.meta), {}
-    schema = _load_schema(r.meta, snap["schema_id"])
-    entries = _manifest_entries(r.meta, snap)
-    data_root = options[side]
-    dv_map = dv_index_map(data_root, snap)
-    merge = schema.get("options", {}).get("merge-engine", "deduplicate")
-    groups: dict[tuple[str, int], list[tuple[str, int]]] = {}
-    for e in entries:
+        return core.schema().to_json(), {}
+
+    def key(e: dict) -> tuple[str, int]:
         part = e["partition"]
         if rename:
             part = {rename.get(k, k): v for k, v in part.items()}
-        key = (json.dumps(part, sort_keys=True), e["bucket"])
-        groups.setdefault(key, []).append(
-            (os.path.join(data_root, e["path"]), e["schema_id"])
-        )
-    parts = {}
-    for key, files in groups.items():
-        dv = {f: dv_map[f] for f, _ in files if f in dv_map} or None
-        parts[key] = PaimonPartition(r.meta, files, merge, schema, dv)
-    return schema, parts
+        return json.dumps(part, sort_keys=True), e["bucket"]
+
+    return core.schema(snap.schema_id).to_json(), bucket_splits(
+        core, snap, core.manifest_entries(snap), key
+    )
 
 
 def _field_types(schema: dict) -> dict[str, str]:
@@ -353,7 +343,7 @@ class ColocatedJoinReader(DataSourceReader):
         # right-only buckets contribute nothing under inner/left join
         return splits or [
             ColocatedSplit(
-                PaimonPartition("", [], None, {"fields": []}),
+                PaimonPartition([], None, {"fields": []}, {}),
                 None, self.left_on, self.right_on, self.how,
                 self.rschema, self.out,
             )
@@ -414,13 +404,9 @@ class ColocatedJoinDataSource(DataSource):
                 for k in ("snapshot", "tag", "as-of-timestamp-ms")
             )
             if not pinned:
-                snap = PaimonReader(
-                    _side_options(self.options, side)
-                )._snapshot()
+                _, snap = _side_snapshot(self.options, side)
                 if snap is not None:
-                    self.options[f"{side}_snapshot"] = str(
-                        snap["snapshot_id"]
-                    )
+                    self.options[f"{side}_snapshot"] = str(snap.snapshot_id)
         lschema = _side_schema(self.options, "left")
         rschema = _side_schema(self.options, "right")
         lon = [c.strip() for c in self.options["left_on"].split(",")]

@@ -6,8 +6,12 @@ reference implements against Presto's connector SPI — handle resolution
 per-split readers `PrestoPageSourceProvider.java:43-86` — re-expressed on
 Spark's `pyspark.sql.datasource` SPI):
 
-- ``PaimonDataSource.schema``   — table resolution from the warehouse path
-  (plain-Python manifest reads; no SparkSession needed on the driver hook).
+- ``PaimonDataSource.schema``   — table resolution from the warehouse path.
+
+Every metadata read and write goes through ``tablemeta.TableMeta``, the
+Spark-free core ``Table`` is built on (these hooks run where no
+SparkSession exists): snapshot resolution, manifest reads, partition
+pruning and stats/bloom file skipping, footer stats, and the commit.
 - ``PaimonReader.pushFilters``  — receives Catalyst's pushed filters,
   converts the supported subset (=, <, <=, >, >=, IN, IS [NOT] NULL — the
   exact set of ``PrestoFilterConverter.java:71-186``) into our structured
@@ -34,9 +38,10 @@ already do); never cache and re-filter one handle.
   bucket-aligned variant SURVEY §7 risk 5 calls for.)
 - ``PaimonWriter``              — task-parallel writes: append/overwrite
   for plain tables, upsert/delete (``option("rowkind", "D")``) for
-  primary-key tables. Each task writes parquet files + footer stats and
+  primary-key tables. Each task stages parquet files + footer stats and
   reports manifest entries in its commit message; the driver-side
-  ``commit`` performs the atomic manifest swap (A22 semantics). Bucket
+  ``commit`` hands them to ``TableMeta._commit``, the one commit the
+  Table API uses too (A22 semantics). Bucket
   assignment uses ``functions/xxhash.spark_bucket`` — a pure-Python XXH64
   bit-identical to the JVM ``pmod(xxhash64(pks), n)`` — so DataSource and
   Table-API writes interleave on one table with a consistent bucket layout.
@@ -73,73 +78,15 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from paimon_presto_spark.plans import fileindex
-from paimon_presto_spark.plans.predicate import P, Predicate, skip_safe_predicate
-
-
-def _meta_path(path: str, branch: str | None) -> str:
-    """Metadata root for a lineage: the table dir, or a branch's fork dir
-    (data files always stay under the table dir — see ``table.Table``)."""
-    if not branch:
-        return path
-    bdir = os.path.join(path, "branch", f"branch-{branch}")
-    if not os.path.isdir(bdir):
-        raise ValueError(f"branch {branch!r} does not exist")
-    return bdir
-
-
-def _load_schema(path: str, schema_id: int | None = None) -> dict:
-    sdir = os.path.join(path, "schema")
-    if schema_id is None:
-        ids = [
-            int(f.split("-")[1].split(".")[0])
-            for f in os.listdir(sdir)
-            if f.startswith("schema-")
-        ]
-        schema_id = max(ids)
-    with open(os.path.join(sdir, f"schema-{schema_id}.json")) as fh:
-        schema = json.load(fh)
-    fmt = schema.get("options", {}).get("file.format", "parquet")
-    if fmt not in ("parquet", "orc", "avro"):
-        # The per-split readers are pyarrow parquet/orc plus the
-        # pure-Python avro codec — the full declared option surface
-        # (PrestoSqlTableOptionUtils.java:111-112 FileFormatType).
-        raise NotImplementedError(
-            f"paimon DataSource supports file.format=parquet, orc or avro"
-            f" (table has {fmt!r})"
-        )
-    return schema
-
-
-def _latest_snapshot(path: str) -> dict | None:
-    latest = os.path.join(path, "snapshot", "LATEST")
-    if not os.path.exists(latest):
-        return None
-    with open(latest) as fh:
-        sid = int(fh.read().strip())
-    with open(os.path.join(path, "snapshot", f"snapshot-{sid}.json")) as fh:
-        return json.load(fh)
-
-
-def _manifest_entries(path: str, snap: dict) -> list[dict]:
-    """Fold a snapshot's manifest (full / list-of-base+deltas — the same
-    three formats ``Table.manifest_entries`` reads)."""
-    with open(os.path.join(path, "manifest", snap["manifest"])) as fh:
-        d = json.load(fh)
-    if "entries" in d:
-        return d["entries"]
-    out: dict[str, dict] = {}
-    for name in d["manifests"]:
-        with open(os.path.join(path, "manifest", name)) as fh:
-            m = json.load(fh)
-        if "entries" in m:
-            out = {e["path"]: e for e in m["entries"]}
-        else:
-            for p in m.get("removes", []):
-                out.pop(p, None)
-            for e in m.get("adds", []):
-                out[e["path"]] = e
-    return list(out.values())
+from paimon_presto_spark.plans.predicate import P, Predicate
+from paimon_presto_spark.tablemeta import (
+    Snapshot,
+    TableMeta,
+    _footer_stats,
+    _is_time_type,
+    _rmtree_quiet,
+    _statable,
+)
 
 
 def _arrow_type(ddl: str):
@@ -164,10 +111,7 @@ def _arrow_type(ddl: str):
     }
     if t in simple:
         return simple[t]
-    # TIME = micros-since-midnight bigint (table._parse_type convention;
-    # single source of truth for the pattern is table._is_time_type)
-    from paimon_presto_spark.table import _is_time_type
-
+    # TIME = micros-since-midnight bigint (table._parse_type convention)
     if _is_time_type(t):
         return pa.int64()
     if t.startswith("decimal"):
@@ -229,29 +173,6 @@ def _cast_to_schema(tbl, schema: dict, writing: bool = False):
     return tbl
 
 
-def _typed_partition_json(partition: dict, schema: dict) -> dict:
-    """Partition dir values (strings) → typed values per the schema JSON
-    (mirror of ``table._typed_partition`` without a TableSchema object)."""
-    from paimon_presto_spark.table import _is_time_type
-
-    types = {f["name"]: f["type"] for f in schema["fields"]}
-    out = {}
-    for k, raw in partition.items():
-        t = types.get(k, "string")
-        if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
-            out[k] = None
-        elif t in ("tinyint", "smallint", "int", "bigint") or _is_time_type(t):
-            # TIME partitions by its physical micros-since-midnight long
-            out[k] = int(raw)
-        elif t in ("float", "double"):
-            out[k] = float(raw)
-        elif t == "boolean":
-            out[k] = str(raw).lower() == "true"
-        else:
-            out[k] = raw
-    return out
-
-
 def _filters_to_predicate(filters: Sequence[Filter]) -> Predicate | None:
     """Convert Spark's pushed filters (ANDed) to our predicate AST.
 
@@ -297,23 +218,59 @@ def _filters_to_predicate(filters: Sequence[Filter]) -> Predicate | None:
 class PaimonPartition(InputPartition):
     def __init__(
         self,
-        path: str,
         files: list[tuple[str, int]],  # (absolute path, writer schema_id)
         merge: str | None,
         schema: dict,
+        writer_schemas: dict[int, dict],  # schema_id -> schema JSON
         dv: dict[str, list[int]] | None = None,  # abs path -> deleted row positions
     ):
-        self.path = path
         self.files = files
         self.merge = merge  # merge-engine name, or None for append-only
         self.schema = schema  # snapshot's table schema JSON
+        self.writer_schemas = writer_schemas
         self.dv = dv
+
+
+def bucket_splits(
+    core: TableMeta, snap: Snapshot, entries: list[dict], key
+) -> dict[Any, PaimonPartition]:
+    """Planned manifest entries → one split per ``key(entry)``, each
+    carrying its files' writer schemas and deletion-vector positions.
+    Shared by ``PaimonReader.partitions`` and the co-located join planner
+    (``sources/colocated.py``)."""
+    schema = core.schema(snap.schema_id)
+    merge = (
+        schema.options.get("merge-engine", "deduplicate")
+        if schema.primary_keys
+        else None
+    )
+    dv = core.dv_positions(snap.dv_index)
+    writers = {
+        sid: core.schema(sid).to_json() for sid in {e["schema_id"] for e in entries}
+    }
+    groups: dict[Any, list[dict]] = {}
+    for e in entries:
+        groups.setdefault(key(e), []).append(e)
+    return {
+        k: PaimonPartition(
+            [(os.path.join(core.path, e["path"]), e["schema_id"]) for e in es],
+            merge,
+            schema.to_json(),
+            {e["schema_id"]: writers[e["schema_id"]] for e in es},
+            {
+                os.path.join(core.path, e["path"]): dv[e["path"]]
+                for e in es
+                if e["path"] in dv
+            }
+            or None,
+        )
+        for k, es in groups.items()
+    }
 
 
 class PaimonReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.path = options["path"]  # data root
-        self.meta = _meta_path(self.path, options.get("branch"))
+        self.core = TableMeta(options["path"], options.get("branch"))
         self.snapshot_id = (
             int(options["snapshot"]) if "snapshot" in options else None
         )
@@ -323,10 +280,6 @@ class PaimonReader(DataSourceReader):
             if "as-of-timestamp-ms" in options
             else None
         )
-        if sum(x is not None for x in (self.snapshot_id, self.tag, self.as_of_ms)) > 1:
-            raise ValueError(
-                "snapshot / tag / as-of-timestamp-ms are mutually exclusive"
-            )
         self.predicate: Predicate | None = None
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -335,145 +288,28 @@ class PaimonReader(DataSourceReader):
         # only use them to shrink the file list.
         return iter(filters)
 
-    def _snapshot(self) -> dict | None:
-        if self.snapshot_id is not None:
-            with open(
-                os.path.join(
-                    self.meta, "snapshot", f"snapshot-{self.snapshot_id}.json"
-                )
-            ) as fh:
-                return json.load(fh)
-        if self.tag is not None:
-            # tags carry the full snapshot payload (they outlive expiry)
-            with open(
-                os.path.join(self.meta, "tag", f"tag-{self.tag}.json")
-            ) as fh:
-                return json.load(fh)
-        if self.as_of_ms is not None:
-            sdir = os.path.join(self.meta, "snapshot")
-            best = None
-            for fn in os.listdir(sdir):
-                if fn.startswith("snapshot-") and fn.endswith(".json"):
-                    with open(os.path.join(sdir, fn)) as fh:
-                        s = json.load(fh)
-                    if s["timestamp_ms"] <= self.as_of_ms and (
-                        best is None or s["snapshot_id"] > best["snapshot_id"]
-                    ):
-                        best = s
-            if best is None:
-                raise ValueError(f"no snapshot at or before {self.as_of_ms}")
-            return best
-        return _latest_snapshot(self.meta)
-
     def partitions(self) -> Sequence[PaimonPartition]:
-        snap = self._snapshot()
+        core = self.core
+        snap = core.resolve_snapshot(self.snapshot_id, self.as_of_ms, self.tag)
         if snap is None:
-            return [PaimonPartition(self.meta, [], None, _load_schema(self.meta))]
-        schema = _load_schema(self.meta, snap["schema_id"])
-        entries = _manifest_entries(self.meta, snap)
-        part_keys = schema.get("partition_keys", [])
-        pks = schema.get("primary_keys", [])
-        if self.predicate is not None:
-            if part_keys:
-                # Only partition-column conjuncts may prune (the full
-                # predicate would evaluate value-column comparisons as
-                # False against a partition-only row and drop everything).
-                # Partition dir values are strings; type them per the
-                # schema before predicate evaluation (int "5" == 5 is
-                # False in Python — untyped comparison would over-prune).
-                pp = skip_safe_predicate(self.predicate, set(part_keys))
-                if pp is not None:
-                    entries = [
-                        e
-                        for e in entries
-                        if pp.test_row(
-                            _typed_partition_json(e["partition"], schema)
-                        )
-                    ]
-            # merge-on-read safety: pk tables (without DV) may only skip
-            # files on key/partition columns — a value-column skip can
-            # drop a key's newest version and resurrect a stale row
-            dv_on = (
-                schema.get("options", {}).get("deletion-vectors.enabled")
-                == "true"
-            )
-            safe = (
-                None
-                if (not pks or dv_on)
-                else set(pks) | set(part_keys)
-            )
-            sp = skip_safe_predicate(self.predicate, safe)
-            if sp is not None:
-                # stats/bloom are writer-name-keyed; translate through
-                # field ids (see fileindex.translate_entry_metadata)
-                cur_by_id = {f["id"]: f["name"] for f in schema["fields"]}
-                ws_fields: dict[int, list] = {}
-
-                def survives(e: dict) -> bool:
-                    sid = e["schema_id"]
-                    wf = ws_fields.get(sid)
-                    if wf is None:
-                        wf = _load_schema(self.meta, sid)["fields"]
-                        ws_fields[sid] = wf
-                    stats, idx = fileindex.translate_entry_metadata(
-                        e, cur_by_id, wf
-                    )
-                    return sp.test_stats(stats, e["row_count"]) and (
-                        sp.test_index(idx)
-                    )
-
-                entries = [e for e in entries if survives(e)]
-        def fent(e) -> tuple[str, int]:
-            return (os.path.join(self.path, e["path"]), e["schema_id"])
-
-        dv_map = dv_index_map(self.path, snap)
-
-        def dv_for(files: list[tuple[str, int]]) -> dict[str, list[int]] | None:
-            sub = {f: dv_map[f] for f, _ in files if f in dv_map}
-            return sub or None
-
-        if not pks:
-            return [
-                PaimonPartition(self.meta, [fent(e)], None, schema, dv_for([fent(e)]))
-                for e in entries
-            ] or [PaimonPartition(self.meta, [], None, schema)]
-        groups: dict[str, list[tuple[str, int]]] = {}
-        for e in entries:
-            key = json.dumps(
-                {"p": e["partition"], "b": e["bucket"]}, sort_keys=True
-            )
-            groups.setdefault(key, []).append(fent(e))
-        merge = schema.get("options", {}).get("merge-engine", "deduplicate")
-        return [
-            PaimonPartition(self.meta, files, merge, schema, dv_for(files))
-            for files in groups.values()
-        ] or [PaimonPartition(self.meta, [], merge, schema)]
+            return [PaimonPartition([], None, core.schema().to_json(), {})]
+        entries, _ = core.plan_entries(snap, self.predicate)
+        if core.schema(snap.schema_id).primary_keys:
+            # one split per (partition, bucket): every version of a key
+            # lives in its bucket, so the split merges on its own
+            def key(e):
+                return json.dumps(e["partition"], sort_keys=True), e["bucket"]
+        else:
+            def key(e):
+                return e["path"]
+        splits = list(bucket_splits(core, snap, entries, key).values())
+        return splits or [PaimonPartition([], None, {"fields": []}, {})]
 
     def read(self, partition: PaimonPartition):
         tbl = read_split_arrow(partition)
         if tbl is None:
             return iter(())
         return iter(tbl.to_batches(max_chunksize=4096))
-
-
-def dv_index_map(data_root: str, snap: dict) -> dict[str, list[int]]:
-    """Deletion-vector index → {absolute data path: deleted positions}.
-
-    Per-file deleted positions, handed to each split so the reader drops
-    them at scan time (plays the reference page-source position filter;
-    the index is small — planner-side read is a metadata read, like the
-    manifest itself). Shared by ``PaimonReader.partitions`` and the
-    co-located join planner (``sources/colocated.py``)."""
-    dv_map: dict[str, list[int]] = {}
-    if snap.get("dv_index"):
-        import pyarrow.parquet as pq
-
-        dvt = pq.read_table(os.path.join(data_root, "index", snap["dv_index"]))
-        for p, pos in zip(
-            dvt.column("path").to_pylist(), dvt.column("pos").to_pylist()
-        ):
-            dv_map.setdefault(os.path.join(data_root, p), []).append(pos)
-    return dv_map
 
 
 def read_split_arrow(partition: PaimonPartition):
@@ -492,10 +328,7 @@ def read_split_arrow(partition: PaimonPartition):
     # through the snapshot schema (renames follow the id, dropped
     # columns vanish, added columns null-fill) — the A18 contract,
     # same as table._project_to on the DataFrame path
-    writer_schemas = {
-        sid: _load_schema(partition.path, sid)
-        for sid in {sid for _, sid in partition.files}
-    }
+    writer_schemas = partition.writer_schemas
 
     def read_one(f: str):
         t = _read_arrow_file(f)
@@ -700,30 +533,33 @@ class PaimonWriter(DataSourceWriter):
     """Task-parallel writes: append/overwrite for plain tables, upsert (or
     delete via ``option("rowkind", "D")``) for primary-key tables.
 
-    Each task writes its rows as parquet (footer stats mirroring
-    ``table._footer_stats``) into a staging dir and reports manifest
-    entries; ``commit`` moves files into ``data/`` and performs the same
-    atomic snapshot swap as ``Table._commit_manifest``. Primary-key rows
-    carry (``__seq``, ``__pos``, ``__row_kind``) and land in the bucket
-    directory chosen by ``functions/xxhash.spark_bucket`` — bit-identical
-    to the JVM write path's ``pmod(xxhash64(pks), n)``, so DataSource and
-    Table-API writes interleave safely on one table. The snapshot id is
-    allocated optimistically at writer construction (same contract as
-    ``Table._commit_write``); a racing commit fails on the O_EXCL swap.
+    Each task stages its rows as parquet under ``.staging-ds-<id>`` with
+    ``tablemeta._footer_stats`` and reports manifest entries; ``commit``
+    gives them to ``TableMeta._commit``, the commit every Table-API write
+    goes through: it moves the files into ``data/``, writes the manifest
+    and claims the next snapshot id, re-stacking on a racing commit's
+    manifest and retrying, and runs the retention and auto-tag hooks.
+    Primary-key rows carry (``__seq``, ``__pos``, ``__row_kind``) and land
+    in the bucket directory chosen by ``functions/xxhash.spark_bucket`` —
+    bit-identical to the JVM write path's ``pmod(xxhash64(pks), n)``, so
+    DataSource and Table-API writes interleave safely on one table. The
+    ``__seq`` stamp is the snapshot id expected at writer construction; as
+    on the Table API, a retried commit keeps the stamp its files carry.
     """
 
     def __init__(self, options: dict, overwrite: bool):
         self.path = options["path"]  # data root
-        self.meta = _meta_path(self.path, options.get("branch"))
+        self.core = TableMeta(self.path, options.get("branch"))
         self.overwrite = overwrite
-        schema = _load_schema(self.meta)
-        if schema.get("options", {}).get("file.format", "parquet") != "parquet":
+        schema = self.core.schema()
+        opts = schema.options
+        if opts.get("file.format", "parquet") != "parquet":
             raise NotImplementedError(
                 "paimon DataSource writes parquet only; write avro tables "
                 "via paimon_presto_spark.Catalog (Table.append/upsert)"
             )
         self.schema = schema
-        self.pks = schema.get("primary_keys", [])
+        self.pks = schema.primary_keys
         self.row_kind = options.get("rowkind", "I")
         if self.row_kind not in ("I", "D"):
             raise ValueError("rowkind must be 'I' or 'D'")
@@ -733,15 +569,15 @@ class PaimonWriter(DataSourceWriter):
         # by default: its writes are CDC batches by contract, and treating
         # a '-D' marker row as a plain insert would store the tombstone as
         # data and leave the key alive.
-        self.rowkind_field = options.get("rowkind-field") or schema.get(
-            "options", {}
-        ).get("rowkind.field")
+        self.rowkind_field = options.get("rowkind-field") or opts.get(
+            "rowkind.field"
+        )
         if self.rowkind_field is not None:
             if not self.pks:
                 raise ValueError("rowkind-field requires a primary-key table")
             if "rowkind" in options:
                 raise ValueError("rowkind and rowkind-field are exclusive")
-            names = {f["name"] for f in schema["fields"]}
+            names = set(schema.field_names())
             # "__row_kind" is the changelog stream's own kind column — a
             # paimon→paimon CDC pipe passes it straight through (drop UB
             # rows first: they carry pre-images, UA already replaces)
@@ -752,18 +588,14 @@ class PaimonWriter(DataSourceWriter):
             # aggregation tables the read path's merge filters 'D' rows
             # before combining, so a '-D' tombstone written here would
             # silently no-op — the Table API raises; this path must too
-            engine = schema.get("options", {}).get(
-                "merge-engine", "deduplicate")
+            engine = opts.get("merge-engine", "deduplicate")
             if engine != "deduplicate":
                 raise ValueError(
                     f"rowkind-field requires merge-engine deduplicate, "
                     f"got {engine!r} (tombstones would be silently "
                     f"discarded by the merge read path)"
                 )
-        if (
-            self.pks
-            and schema.get("options", {}).get("changelog-producer") == "lookup"
-        ):
+        if self.pks and opts.get("changelog-producer") == "lookup":
             # the lookup producer needs a pre-commit key lookup against the
             # merged state; task-parallel writers can't do that, and a
             # commit WITHOUT a changelog would leave a silent hole in the
@@ -778,17 +610,14 @@ class PaimonWriter(DataSourceWriter):
                 "overwrite mode on a primary-key table is ambiguous; use "
                 "Table.overwrite() for an explicit full replacement"
             )
-        if self.pks and schema.get("options", {}).get("bucket") == "-1":
+        if self.pks and opts.get("bucket") == "-1":
             # bucket assignment needs the key index (a join per commit);
             # the Table API owns dynamic-bucket writes
             raise ValueError(
                 "primary-key table uses dynamic bucketing (bucket=-1); write "
                 "through Table.upsert()/delete() so keys keep their buckets"
             )
-        if (
-            self.pks
-            and schema.get("options", {}).get("deletion-vectors.enabled") == "true"
-        ):
+        if self.pks and opts.get("deletion-vectors.enabled") == "true":
             # DV upserts must mark old positions in the same commit (a
             # key-lookup job); task-parallel writers can't do that, so the
             # Table API owns DV mutations
@@ -797,8 +626,8 @@ class PaimonWriter(DataSourceWriter):
                 "Table.upsert()/delete() so the deletion-vector index stays "
                 "consistent"
             )
-        prev = _latest_snapshot(self.meta)
-        self.next_snapshot = (prev["snapshot_id"] + 1) if prev else 1
+        prev = self.core.snapshot()
+        self.next_snapshot = (prev.snapshot_id + 1) if prev else 1
         self.staging = os.path.join(self.path, f".staging-ds-{uuid.uuid4().hex}")
 
     def write(self, iterator) -> PaimonCommitMessage:
@@ -821,16 +650,16 @@ class PaimonWriter(DataSourceWriter):
             ]
         if not rows:
             return PaimonCommitMessage([])
-        names = [f["name"] for f in self.schema["fields"]]
-        types = {f["name"]: f["type"] for f in self.schema["fields"]}
-        part_keys = self.schema.get("partition_keys", [])
+        names = self.schema.field_names()
+        types = {f["name"]: f["type"] for f in self.schema.fields}
+        part_keys = self.schema.partition_keys
         # index by name, not getattr: Row.__getattr__ rejects the __seq/
         # __row_kind system columns a paimon→paimon changelog pipe carries
         cols = {n: [r[n] for r in rows] for n in names}
         if self.pks:
             from paimon_presto_spark.functions.xxhash import spark_bucket
 
-            nb = int(self.schema.get("options", {}).get("bucket", "4"))
+            nb = self.schema.num_buckets
             pk_t = [(k, types[k]) for k in self.pks]
             buckets = [
                 spark_bucket(nb, [(r[k], t) for k, t in pk_t])
@@ -854,43 +683,17 @@ class PaimonWriter(DataSourceWriter):
         tbl = pa.table(cols)
         os.makedirs(self.staging, exist_ok=True)
         entries = []
-        statable = {
-            f["name"]
-            for f in self.schema["fields"]
-            if not f["type"].startswith(("array", "map", "struct", "binary"))
-        }
+        statable = _statable(self.schema)
+        schema_json = self.schema.to_json()
+        seq = self.next_snapshot if self.pks else 0
 
         def _write_group(sub_tbl, partition: dict[str, Any], bucket: int = 0):
             name = f"data-ds-{uuid.uuid4().hex}.parquet"
             dst = os.path.join(self.staging, name)
-            pq.write_table(_cast_to_schema(sub_tbl, self.schema, writing=True), dst)
-            meta = pq.ParquetFile(dst).metadata
-            stats: dict[str, dict] = {}
-            for rg in range(meta.num_row_groups):
-                g = meta.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    col = c.path_in_schema
-                    try:
-                        s = c.statistics
-                    except Exception:
-                        continue  # unsupported physical type: no stats
-                    if col not in statable or s is None:
-                        continue
-                    cur = stats.setdefault(
-                        col, {"min": None, "max": None, "null_count": 0}
-                    )
-                    try:
-                        if s.has_min_max:
-                            mn, mx = _plain(s.min), _plain(s.max)
-                            cur["min"] = mn if cur["min"] is None else min(cur["min"], mn)
-                            cur["max"] = mx if cur["max"] is None else max(cur["max"], mx)
-                    except Exception:
-                        pass  # lazy raise on .min/.max (e.g. FLBA decimals)
-                    cur["null_count"] += s.null_count or 0
+            pq.write_table(_cast_to_schema(sub_tbl, schema_json, writing=True), dst)
             entries.append(
                 {
-                    "path": name,  # staged; commit() relocates
+                    "path": name,  # commit() prefixes its data/ directory
                     # absolute staged location: the streaming runner's
                     # driver-side writer instance is NOT the task's, so
                     # the message must carry where the file actually is
@@ -899,8 +702,10 @@ class PaimonWriter(DataSourceWriter):
                     "bucket": bucket,
                     "row_count": sub_tbl.num_rows,
                     "file_size": os.path.getsize(dst),
-                    "schema_id": self.schema["schema_id"],
-                    "stats": stats,
+                    "schema_id": self.schema.schema_id,
+                    "min_seq": seq,
+                    "max_seq": seq,
+                    "stats": _footer_stats(pq.ParquetFile(dst).metadata, statable),
                 }
             )
 
@@ -928,106 +733,36 @@ class PaimonWriter(DataSourceWriter):
             _write_group(tbl, {})
         return PaimonCommitMessage(entries)
 
-    def commit(self, messages) -> None:
-        import time as _time
+    def _discard_staging(self, messages) -> None:
+        """Remove the staging dirs of this writer and of `messages`' files
+        (a streaming task's dir is not the driver instance's)."""
+        for d in {self.staging} | {
+            os.path.dirname(e["staged"]) for m in messages if m for e in m.entries
+        }:
+            _rmtree_quiet(d)
 
+    def commit(self, messages) -> None:
         entries = [e for m in messages if m for e in m.entries]
-        data_dir = os.path.join(self.path, "data")
-        os.makedirs(data_dir, exist_ok=True)
-        final_entries = []
-        staging_dirs = {self.staging}
         for e in entries:
-            src = e.get("staged") or os.path.join(self.staging, e["path"])
-            staging_dirs.add(os.path.dirname(src))
-            parts = [
-                f"__part_{k}={v}" for k, v in sorted(e["partition"].items())
-            ]
+            parts = [f"__part_{k}={v}" for k, v in sorted(e["partition"].items())]
             if self.pks:
                 parts.append(f"__bucket={e['bucket']}")
-            sub = "/".join(parts)
-            dst_dir = os.path.join(data_dir, sub) if sub else data_dir
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, e["path"])
-            os.rename(src, dst)
-            final_entries.append(
-                {
-                    **{k: v for k, v in e.items() if k != "staged"},
-                    "path": os.path.relpath(dst, self.path),
-                    "min_seq": self.next_snapshot if self.pks else 0,
-                    "max_seq": self.next_snapshot if self.pks else 0,
-                }
-            )
-        for d in staging_dirs:
-            _rmtree(d)
-        # snapshot swap at the pre-allocated id (CommitConflict on a race)
-        prev = _latest_snapshot(self.meta)
-        sid = self.next_snapshot
-        os.makedirs(os.path.join(self.meta, "manifest"), exist_ok=True)
-        os.makedirs(os.path.join(self.meta, "snapshot"), exist_ok=True)
-        stamp = f"{sid}-{uuid.uuid4().hex}"
-        new_entries = final_entries
+            e["path"] = os.path.join("data", *parts, e["path"])
         if self.overwrite:
             kind = "OVERWRITE"
+        elif not self.pks:
+            kind = "APPEND"
+        elif self.row_kind == "D" and self.rowkind_field is None:
+            kind = "DELETE"
         else:
-            kind = (
-                ("DELETE" if self.row_kind == "D" and self.rowkind_field is None
-                 else "UPSERT")
-                if self.pks
-                else "APPEND"
-            )
-            if prev is not None:
-                final_entries = _manifest_entries(self.meta, prev) + final_entries
-        # additive commits write a DELTA member + list (O(batch), not
-        # O(table) — Table._write_manifest's contract); overwrite/first
-        # commits write a full base
-        threshold = int(
-            self.schema.get("options", {}).get(
-                "manifest.full-compaction-threshold", "10")
-        )
-        members: list[str] = []
-        if prev is not None and not self.overwrite:
-            with open(os.path.join(self.meta, "manifest", prev["manifest"])) as fh:
-                pd = json.load(fh)
-            members = pd["manifests"] if "manifests" in pd else [prev["manifest"]]
-        if not members or len(members) + 1 >= threshold:
-            mname = f"manifest-{stamp}.json"
-            with open(os.path.join(self.meta, "manifest", mname), "w") as fh:
-                json.dump({"entries": final_entries}, fh, default=str)
-        else:
-            dname = f"manifest-delta-{stamp}.json"
-            with open(os.path.join(self.meta, "manifest", dname), "w") as fh:
-                json.dump({"adds": new_entries, "removes": []}, fh, default=str)
-            mname = f"manifest-{stamp}.json"
-            with open(os.path.join(self.meta, "manifest", mname), "w") as fh:
-                json.dump({"manifests": members + [dname]}, fh)
-        snap = {
-            "snapshot_id": sid,
-            "schema_id": self.schema["schema_id"],
-            "commit_user": os.environ.get("USER", "spark"),
-            "commit_identifier": sid,
-            "commit_kind": kind,
-            "timestamp_ms": int(_time.time() * 1000),
-            "manifest": mname,
-            "total_rows": sum(e["row_count"] for e in final_entries),
-            # appends never disturb existing row positions: carry the
-            # deletion-vector index forward (overwrite resets it)
-            "dv_index": (
-                None
-                if self.overwrite
-                else (prev or {}).get("dv_index")
-            ),
-        }
-        spath = os.path.join(self.meta, "snapshot", f"snapshot-{sid}.json")
-        fd = os.open(spath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as fh:
-            json.dump(snap, fh)
-        tmp = os.path.join(self.meta, "snapshot", f".LATEST.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(str(sid))
-        os.replace(tmp, os.path.join(self.meta, "snapshot", "LATEST"))
+            kind = "UPSERT"
+        try:
+            self.core._commit(self.schema, kind, entries, replace=self.overwrite)
+        finally:
+            self._discard_staging(messages)
 
     def abort(self, messages) -> None:
-        _rmtree(self.staging)
+        self._discard_staging(messages)
 
 
 class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
@@ -1037,11 +772,10 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
     re-committed), the same contract as ``streaming.table_sink`` but
     running on Spark's native sink protocol instead of foreachBatch.
 
-    The batch writer's optimistic snapshot allocation moves from writer
-    construction to per-batch: tasks stamp ``__seq`` from the latest
-    snapshot they observe, and the driver's commit claims that id with
-    the same O_EXCL swap — a racing external commit fails the batch and
-    Spark replays it with fresh stamps.
+    The ``__seq`` stamp moves from writer construction to per-batch:
+    tasks stamp it from the latest snapshot they observe, and the
+    driver's commit is the batch writer's ``TableMeta._commit``, which
+    re-stacks on a racing external commit instead of failing the batch.
     """
 
     def __init__(self, options: dict, overwrite: bool):
@@ -1050,7 +784,7 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
 
     def _batches_path(self) -> str:
         return os.path.join(
-            self.meta, "streaming", f"ds-batches-{self.query_name}.json"
+            self.core.meta_path, "streaming", f"ds-batches-{self.query_name}.json"
         )
 
     def _committed(self) -> set[int]:
@@ -1061,28 +795,18 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
             return set()
 
     def write(self, iterator):
-        # re-resolve the target snapshot per micro-batch (the batch writer
+        # re-resolve the __seq stamp per micro-batch (the batch writer
         # pins it once at construction; a stream commits many times)
-        prev = _latest_snapshot(self.meta)
-        self.next_snapshot = (prev["snapshot_id"] + 1) if prev else 1
+        prev = self.core.snapshot()
+        self.next_snapshot = (prev.snapshot_id + 1) if prev else 1
         return super().write(iterator)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
         done = self._committed()
         if batchId in done:
             # replay of a durable batch: drop its staged files, commit nothing
-            for m in messages:
-                for e in (m.entries if m else []):
-                    try:
-                        os.remove(
-                            e.get("staged")
-                            or os.path.join(self.staging, e["path"])
-                        )
-                    except FileNotFoundError:
-                        pass
+            self._discard_staging(messages)
             return
-        prev = _latest_snapshot(self.meta)
-        self.next_snapshot = (prev["snapshot_id"] + 1) if prev else 1
         PaimonWriter.commit(self, messages)
         os.makedirs(os.path.dirname(self._batches_path()), exist_ok=True)
         done.add(int(batchId))
@@ -1092,30 +816,23 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
         os.replace(tmp, self._batches_path())
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        for m in messages:
-            for e in (m.entries if m else []):
-                try:
-                    os.remove(
-                        e.get("staged") or os.path.join(self.staging, e["path"])
-                    )
-                except FileNotFoundError:
-                    pass
+        self._discard_staging(messages)
 
 
 class PaimonStreamPartition(InputPartition):
     def __init__(
         self,
         mode: str,  # "files" | "clg" | "dvdiff"
-        meta: str,
         schema: dict,
         seq: int,
         files: list[tuple[str, int]] | None = None,  # (abs path, schema_id)
         positions: dict[str, tuple[int, list[int]]] | None = None,
         clg_dir: str | None = None,
+        writer_schemas: dict[int, dict] | None = None,  # schema_id -> JSON
     ):
         self.mode = mode
-        self.meta = meta
         self.schema = schema
+        self.writer_schemas = writer_schemas or {}
         self.seq = seq
         self.files = files or []
         self.positions = positions or {}
@@ -1141,9 +858,7 @@ class PaimonStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, options: dict):
-        self.path = options["path"]
-        self.meta = _meta_path(self.path, options.get("branch"))
-        self.schema_json = _load_schema(self.meta)
+        self.core = TableMeta(options["path"], options.get("branch"))
         self.consumer = options.get("consumer-id") or options.get("consumer_id")
         self.starting = options.get("startingoffsets", options.get(
             "startingOffsets", "earliest"))
@@ -1157,85 +872,70 @@ class PaimonStreamReader(DataSourceStreamReader):
                     "from-snapshot and startingOffsets=latest are exclusive")
             self.from_snapshot = int(self.from_snapshot)
 
-    def _ids(self) -> list[int]:
-        sdir = os.path.join(self.meta, "snapshot")
-        if not os.path.isdir(sdir):
-            return []
-        return sorted(
-            int(f[len("snapshot-"):-len(".json")])
-            for f in os.listdir(sdir)
-            if f.startswith("snapshot-") and f.endswith(".json")
-        )
-
-    def _snap(self, sid: int) -> dict:
-        with open(os.path.join(self.meta, "snapshot", f"snapshot-{sid}.json")) as fh:
-            return json.load(fh)
-
     def initialOffset(self) -> dict:
         if self.consumer:
-            cpath = os.path.join(
-                self.meta, "consumer", f"consumer-{self.consumer}.json"
-            )
-            if os.path.exists(cpath):
-                with open(cpath) as fh:
-                    return {"snapshot": json.load(fh)["next_snapshot"] - 1}
+            nxt = self.core.list_consumers().get(self.consumer)
+            if nxt is not None:
+                return {"snapshot": nxt - 1}
         if self.from_snapshot is not None:
             return {"snapshot": max(0, self.from_snapshot - 1)}
         if str(self.starting).lower() == "latest":
-            ids = self._ids()
-            return {"snapshot": ids[-1] if ids else 0}
+            return self.latestOffset()
         return {"snapshot": 0}
 
     def latestOffset(self) -> dict:
-        ids = self._ids()
+        ids = self.core.snapshot_ids()
         return {"snapshot": ids[-1] if ids else 0}
 
     def partitions(self, start: dict, end: dict) -> Sequence[PaimonStreamPartition]:
+        core = self.core
         lo, hi = start["snapshot"], end["snapshot"]
-        producer = self.schema_json.get("options", {}).get("changelog-producer")
-        ids = [i for i in self._ids() if lo < i <= hi]
+        producer = core.schema().options.get("changelog-producer")
+        all_ids = core.snapshot_ids()
         parts: list[PaimonStreamPartition] = []
         prev_paths: set[str] | None = None
-        prev_dv: str | None = None
-        if lo in self._ids():
-            base = self._snap(lo)
-            prev_dv = base.get("dv_index")
-        for sid in ids:
-            snap = self._snap(sid)
-            schema = _load_schema(self.meta, snap["schema_id"])
-            entries = _manifest_entries(self.meta, snap)
+        prev_dv = core.snapshot(lo).dv_index if lo in all_ids else None
+
+        def writers(sids) -> dict[int, dict]:
+            return {sid: core.schema(sid).to_json() for sid in sids}
+
+        for sid in (i for i in all_ids if lo < i <= hi):
+            snap = core.snapshot(sid)
+            schema = core.schema(snap.schema_id).to_json()
+            entries = core.manifest_entries(snap)
             if producer == "lookup":
-                if snap.get("changelog"):
+                if snap.changelog:
                     parts.append(PaimonStreamPartition(
-                        "clg", self.meta, schema, sid,
+                        "clg", schema, sid,
                         clg_dir=os.path.join(
-                            self.meta, "changelog", snap["changelog"]),
+                            core.meta_path, "changelog", snap.changelog),
                     ))
                 prev_paths = {e["path"] for e in entries}
-                prev_dv = snap.get("dv_index")
+                prev_dv = snap.dv_index
                 continue
-            if snap["commit_kind"] != "COMPACT":
+            if snap.commit_kind != "COMPACT":
                 if prev_paths is None:
                     prev_paths = (
                         {e["path"] for e in
-                         _manifest_entries(self.meta, self._snap(sid - 1))}
-                        if sid - 1 in self._ids()
+                         core.manifest_entries(core.snapshot(sid - 1))}
+                        if sid - 1 in all_ids
                         else set()
                     )
                 new = [e for e in entries if e["path"] not in prev_paths]
                 for e in new:
                     parts.append(PaimonStreamPartition(
-                        "files", self.meta, schema, sid,
-                        files=[(os.path.join(self.path, e["path"]),
+                        "files", schema, sid,
+                        files=[(os.path.join(core.path, e["path"]),
                                 e["schema_id"])],
+                        writer_schemas=writers([e["schema_id"]]),
                     ))
                 # deletion-vector diff: positions newly marked dead in this
                 # commit come back as D rows (lossless, like incremental_df)
-                dv = snap.get("dv_index")
+                dv = snap.dv_index
                 if dv and dv != prev_dv:
-                    diff = _dv_positions(self.path, dv)
+                    diff = core.dv_positions(dv)
                     if prev_dv:
-                        old = _dv_positions(self.path, prev_dv)
+                        old = core.dv_positions(prev_dv)
                         diff = {
                             f: sorted(set(ps) - set(old.get(f, [])))
                             for f, ps in diff.items()
@@ -1244,15 +944,17 @@ class PaimonStreamReader(DataSourceStreamReader):
                     path_sid = {e["path"]: e["schema_id"] for e in entries}
                     for f, ps in diff.items():
                         if ps and f in path_sid:
-                            by_schema[os.path.join(self.path, f)] = (
+                            by_schema[os.path.join(core.path, f)] = (
                                 path_sid[f], ps)
                     if by_schema:
                         parts.append(PaimonStreamPartition(
-                            "dvdiff", self.meta, schema, sid,
+                            "dvdiff", schema, sid,
                             positions=by_schema,
+                            writer_schemas=writers(
+                                {i for i, _ in by_schema.values()}),
                         ))
             prev_paths = {e["path"] for e in entries}
-            prev_dv = snap.get("dv_index")
+            prev_dv = snap.dv_index
         return parts
 
     def read(self, partition: PaimonStreamPartition):
@@ -1298,7 +1000,7 @@ class PaimonStreamReader(DataSourceStreamReader):
             for f, (sid, positions) in partition.positions.items():
                 t = _project_arrow(
                     pq.read_table(f).take(positions),
-                    _load_schema(partition.meta, sid),
+                    partition.writer_schemas[sid],
                     schema,
                 )
                 tables.append(t.select([c for c in t.column_names if c in names]))
@@ -1306,7 +1008,7 @@ class PaimonStreamReader(DataSourceStreamReader):
             return finalize(tbl, partition.seq, "D")
         tables = [
             _project_arrow(
-                _read_arrow_file(f), _load_schema(partition.meta, sid), schema
+                _read_arrow_file(f), partition.writer_schemas[sid], schema
             )
             for f, sid in partition.files
         ]
@@ -1318,37 +1020,12 @@ class PaimonStreamReader(DataSourceStreamReader):
         return finalize(tbl, partition.seq, "I")
 
     def commit(self, end: dict) -> None:
-        if not self.consumer:
-            return
-        cdir = os.path.join(self.meta, "consumer")
-        os.makedirs(cdir, exist_ok=True)
-        import time as _time
-
-        tmp = os.path.join(cdir, f".consumer-{self.consumer}.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"next_snapshot": int(end["snapshot"]) + 1,
-                 "update_ms": int(_time.time() * 1000)},
-                fh,
-            )
-        os.replace(tmp, os.path.join(cdir, f"consumer-{self.consumer}.json"))
+        if self.consumer:
+            self.core.register_consumer(self.consumer, int(end["snapshot"]) + 1)
 
 
 _SEQ = "__seq"
 _KIND = "__row_kind"
-
-
-def _dv_positions(path: str, dv_name: str) -> dict[str, list[int]]:
-    """Read a deletion-vector index dataset: rel path -> positions."""
-    import pyarrow.parquet as pq
-
-    dvt = pq.read_table(os.path.join(path, "index", dv_name))
-    out: dict[str, list[int]] = {}
-    for p, pos in zip(
-        dvt.column("path").to_pylist(), dvt.column("pos").to_pylist()
-    ):
-        out.setdefault(p, []).append(pos)
-    return out
 
 
 def spark_ddl_type(t: str) -> str:
@@ -1360,8 +1037,6 @@ def spark_ddl_type(t: str) -> str:
     write-side concerns, and Spark's Arrow conversion for Python data
     sources rejects Char/VarcharType."""
     import re as _re
-
-    from paimon_presto_spark.table import _is_time_type
 
     if _is_time_type(t):
         return "bigint"
@@ -1381,12 +1056,9 @@ class PaimonDataSource(DataSource):
         return "paimon"
 
     def schema(self) -> str:
-        schema = _load_schema(
-            _meta_path(self.options["path"], self.options.get("branch"))
-        )
+        schema = TableMeta(self.options["path"], self.options.get("branch")).schema()
         cols = ", ".join(
-            f"`{f['name']}` {spark_ddl_type(f['type'])}"
-            for f in schema["fields"]
+            f"`{f['name']}` {spark_ddl_type(f['type'])}" for f in schema.fields
         )
         if self.options.get("changelog") == "true":
             cols += f", `{_SEQ}` bigint, `{_KIND}` string"
@@ -1418,22 +1090,3 @@ class PaimonDataSource(DataSource):
                 "micro-batch; complete-mode overwrite is not supported"
             )
         return PaimonStreamWriter(self.options, overwrite)
-
-
-def _plain(v):
-    import datetime
-
-    if isinstance(v, bytes):
-        try:
-            return v.decode("utf-8")
-        except UnicodeDecodeError:
-            return v.hex()
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return str(v)
-    return v
-
-
-def _rmtree(path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)

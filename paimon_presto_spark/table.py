@@ -18,19 +18,11 @@ Reference parity map (SURVEY §2.1):
 - engine-native writes (reference lacks
   them — ``PrestoMetadata.java:229-263``) . A24
 
-Storage layout (one directory per table)::
-
-    schema/schema-<id>.json      column list w/ stable field ids, pks, partition keys, options
-    snapshot/snapshot-<id>.json  commit metadata -> manifest file
-    snapshot/LATEST              current snapshot id (advisory pointer)
-    manifest/manifest-<id>.json  FULL file listing at that snapshot + per-file column stats
-    data/...                     parquet data files (immutable)
-
-Commits are atomic: the snapshot JSON is created with O_EXCL, so two
-concurrent committers cannot both claim snapshot N — the loser re-plans
-against the winner's manifest and retries (the reference gets the same
-read-committed, snapshot-isolated behavior from immutable Paimon snapshots
-— ``PrestoConnectorBase.java:70-97``).
+The storage layout, metadata reads, scan planning on metadata and the
+commit protocol live in ``tablemeta`` — the Spark-free core that the
+Python DataSource (``format("paimon")``) shares. ``Table`` subclasses its
+``TableMeta`` and adds the Spark half: data-file writes and reads,
+merge-on-read, and the DataFrame-valued system tables.
 
 Scale notes:
 - Data I/O is always Spark (``df.write.parquet`` / ``spark.read.parquet``);
@@ -54,7 +46,6 @@ import os
 import re as _re_mod
 import time
 import uuid
-from dataclasses import dataclass, field
 from typing import Any, Iterable
 
 import pyspark.sql.functions as F
@@ -63,7 +54,21 @@ from pyspark.sql import types as T
 
 from paimon_presto_spark import properties
 from paimon_presto_spark.plans import fileindex
-from paimon_presto_spark.plans.predicate import Predicate, skip_safe_predicate
+from paimon_presto_spark.plans.predicate import Predicate
+from paimon_presto_spark.tablemeta import (
+    CommitConflict,
+    Snapshot,
+    TableMeta,
+    TableSchema,
+    _copyfile,
+    _footer_stats,
+    _is_time_type,
+    _parse_duration_ms,
+    _plain,
+    _rmtree_quiet,
+    _statable,
+    _typed_partition,
+)
 
 SEQ_COL = "__seq"
 POS_COL = "__pos"
@@ -77,72 +82,6 @@ DV_POS_COL = "__dv_pos"  # row position within that file (_metadata.row_index)
 # --------------------------------------------------------------------------
 # schema
 # --------------------------------------------------------------------------
-
-
-@dataclass
-class TableSchema:
-    schema_id: int
-    fields: list[dict]  # {"id": int, "name": str, "type": ddl-str, "nullable": bool}
-    primary_keys: list[str]
-    partition_keys: list[str]
-    options: dict[str, str]
-    highest_field_id: int
-
-    def to_json(self) -> dict:
-        return {
-            "schema_id": self.schema_id,
-            "fields": self.fields,
-            "primary_keys": self.primary_keys,
-            "partition_keys": self.partition_keys,
-            "options": self.options,
-            "highest_field_id": self.highest_field_id,
-        }
-
-    @staticmethod
-    def from_json(d: dict) -> "TableSchema":
-        return TableSchema(
-            schema_id=d["schema_id"],
-            fields=d["fields"],
-            primary_keys=d["primary_keys"],
-            partition_keys=d["partition_keys"],
-            options=d.get("options", {}),
-            highest_field_id=d["highest_field_id"],
-        )
-
-    def spark_schema(self) -> T.StructType:
-        return T.StructType(
-            [
-                T.StructField(f["name"], _parse_type(f["type"]), f.get("nullable", True))
-                for f in self.fields
-            ]
-        )
-
-    def field_names(self) -> list[str]:
-        return [f["name"] for f in self.fields]
-
-    def resolve(self, name: str) -> str:
-        """Case-insensitive column resolution (``FieldNameUtils.java:30-35``)."""
-        for f in self.fields:
-            if f["name"].lower() == name.lower():
-                return f["name"]
-        raise KeyError(f"no such column: {name}")
-
-    @property
-    def num_buckets(self) -> int:
-        return int(self.options.get("bucket", "4"))
-
-
-_TIME_RE = None  # lazy
-
-
-def _is_time_type(ddl: str) -> bool:
-    """True for TIME / TIME(p) declarations (any precision 0-9)."""
-    global _TIME_RE
-    if _TIME_RE is None:
-        import re as _re
-
-        _TIME_RE = _re.compile(r"^\s*time\s*(\(\s*\d\s*\))?\s*$", _re.I)
-    return bool(_TIME_RE.match(ddl))
 
 
 #: Numeric declared-type names — the single classification shared by
@@ -295,160 +234,13 @@ def schema_from_spark(
 # --------------------------------------------------------------------------
 
 
-class CommitConflict(Exception):
-    pass
-
-
-# folded manifest listings keyed by (meta_path, manifest file name) —
-# manifest files are immutable once written, so entries never go stale
-_MANIFEST_CACHE: dict[tuple[str, str], list[dict]] = {}
-
-
-@dataclass
-class Snapshot:
-    snapshot_id: int
-    schema_id: int
-    commit_user: str
-    commit_identifier: int
-    commit_kind: str  # APPEND | UPSERT | DELETE | OVERWRITE | COMPACT
-    timestamp_ms: int
-    manifest: str
-    total_rows: int
-    # deletion-vector index for this snapshot: name of a parquet dataset
-    # under <table>/index/ holding (path, pos) deleted-row positions; None
-    # when the snapshot has no deletions (or the table is not in DV mode)
-    dv_index: str | None = None
-    # dynamic-bucket key index (bucket=-1 tables): parquet dataset under
-    # <table>/index/ mapping xxhash64(pk) -> assigned bucket
-    bucket_index: str | None = None
-    # retraction changelog for this commit (changelog-producer=lookup):
-    # parquet dataset under <meta>/changelog/ with I/UB/UA/D row kinds
-    changelog: str | None = None
-
-    def to_json(self):
-        return self.__dict__.copy()
-
-
-class Table:
-    """A snapshot-versioned, optionally primary-keyed, partitioned table.
-
-    `branch` selects an alternative metadata lineage (Paimon branches):
-    schema/snapshot/manifest/tag/consumer files resolve under
-    ``branch/branch-<name>/`` while data files stay shared at the table
-    root — a branch is a writable fork that costs metadata only.
-    """
+class Table(TableMeta):
+    """A snapshot-versioned, optionally primary-keyed, partitioned table:
+    the ``TableMeta`` metadata core plus the Spark data path."""
 
     def __init__(self, spark: SparkSession, path: str, branch: str | None = None):
+        super().__init__(path, branch)
         self.spark = spark
-        self.path = path  # table root: data/ and staging/ always live here
-        self.branch_name = branch
-        self.meta_path = (
-            os.path.join(path, "branch", f"branch-{branch}") if branch else path
-        )
-
-    # -- metadata ----------------------------------------------------------
-
-    def _schema_path(self, sid: int) -> str:
-        return os.path.join(self.meta_path, "schema", f"schema-{sid}.json")
-
-    def schema(self, schema_id: int | None = None) -> TableSchema:
-        if schema_id is None:
-            sdir = os.path.join(self.meta_path, "schema")
-            schema_id = max(
-                int(f[len("schema-") : -len(".json")]) for f in os.listdir(sdir)
-            )
-        with open(self._schema_path(schema_id)) as fh:
-            return TableSchema.from_json(json.load(fh))
-
-    def snapshot_ids(self) -> list[int]:
-        sdir = os.path.join(self.meta_path, "snapshot")
-        if not os.path.isdir(sdir):
-            return []
-        return sorted(
-            int(f[len("snapshot-") : -len(".json")])
-            for f in os.listdir(sdir)
-            if f.startswith("snapshot-") and f.endswith(".json")
-        )
-
-    def snapshot(self, snapshot_id: int | None = None) -> Snapshot | None:
-        ids = self.snapshot_ids()
-        if not ids:
-            return None
-        sid = snapshot_id if snapshot_id is not None else ids[-1]
-        if sid not in ids:
-            raise ValueError(f"snapshot {sid} does not exist (have {ids})")
-        with open(os.path.join(self.meta_path, "snapshot", f"snapshot-{sid}.json")) as fh:
-            return Snapshot(**json.load(fh))
-
-    def snapshot_as_of(self, timestamp_ms: int) -> Snapshot:
-        """Latest snapshot committed at or before `timestamp_ms` (A12)."""
-        cand = [
-            self.snapshot(i)
-            for i in self.snapshot_ids()
-        ]
-        cand = [s for s in cand if s.timestamp_ms <= timestamp_ms]
-        if not cand:
-            raise ValueError(f"no snapshot at or before {timestamp_ms}")
-        return max(cand, key=lambda s: s.snapshot_id)
-
-    def manifest_entries(self, snap: Snapshot | None = None) -> list[dict]:
-        """The snapshot's full file listing.
-
-        Three manifest formats (Paimon's base+delta design, so a commit
-        WRITES O(changed files), not O(table files) — see
-        ``_commit_manifest``):
-
-        - ``{"entries": [...]}`` — full listing (legacy, and the base
-          written by manifest full-compaction);
-        - ``{"manifests": [names]}`` — a manifest LIST whose members fold
-          left-to-right;
-        - ``{"adds": [...], "removes": [paths]}`` — a delta member.
-        """
-        snap = snap or self.snapshot()
-        if snap is None:
-            return []
-        # manifests are immutable once written: cache folded results by
-        # file name (planning calls this repeatedly — stats-based
-        # clustering alone reads it per column)
-        key = (self.meta_path, snap.manifest)
-        hit = _MANIFEST_CACHE.get(key)
-        if hit is not None:
-            return hit
-        with open(os.path.join(self.meta_path, "manifest", snap.manifest)) as fh:
-            d = json.load(fh)
-        if "entries" in d:
-            out_list = d["entries"]
-        else:
-            out: dict[str, dict] = {}
-            for name in d["manifests"]:
-                with open(os.path.join(self.meta_path, "manifest", name)) as fh:
-                    m = json.load(fh)
-                if "entries" in m:
-                    out = {e["path"]: e for e in m["entries"]}
-                else:
-                    for p in m.get("removes", []):
-                        out.pop(p, None)
-                    for e in m.get("adds", []):
-                        out[e["path"]] = e
-            out_list = list(out.values())
-        if len(_MANIFEST_CACHE) > 64:
-            _MANIFEST_CACHE.clear()  # crude cap; entries are per-snapshot
-        _MANIFEST_CACHE[key] = out_list
-        return out_list
-
-    def _manifest_members(self, snap: Snapshot) -> list[str]:
-        """Every manifest file the snapshot references: the pointer file
-        itself plus, for list manifests, all member files (shared with
-        neighboring snapshots — expiry must treat them as shared)."""
-        with open(os.path.join(self.meta_path, "manifest", snap.manifest)) as fh:
-            d = json.load(fh)
-        if "manifests" in d:
-            return [snap.manifest] + list(d["manifests"])
-        return [snap.manifest]
-
-    @property
-    def is_primary_keyed(self) -> bool:
-        return bool(self.schema().primary_keys)
 
     # -- deletion vectors --------------------------------------------------
     #
@@ -462,13 +254,6 @@ class Table:
     # The reference exposes the option passthrough at
     # PrestoSqlTableOptionUtils.java (table-options surface); the index
     # layout mirrors Paimon's <table>/index/ deletion-vector files.
-
-    @property
-    def dv_enabled(self) -> bool:
-        return self.schema().options.get("deletion-vectors.enabled") == "true"
-
-    def _dv_root(self) -> str:
-        return os.path.join(self.path, "index")
 
     def dv_df(self, snap: Snapshot | None = None) -> DataFrame | None:
         """The snapshot's deletion-vector index as a DataFrame of
@@ -534,9 +319,6 @@ class Table:
     # full rescale rewrite. A key's bucket never changes, so per-bucket
     # merge-on-read (the shuffle-free DataSource reader) stays correct.
 
-    @property
-    def is_dynamic_bucket(self) -> bool:
-        return self.schema().options.get("bucket") == "-1"
 
     def bucket_index_df(self, snap: Snapshot | None = None) -> DataFrame | None:
         snap = snap if snap is not None else self.snapshot()
@@ -657,8 +439,8 @@ class Table:
             F.col(DV_PATH_COL).alias("path"), F.col(DV_POS_COL).alias("pos")
         )
         dv_name = self._write_dv_index(hits, base)
-        return self._commit_meta(
-            "DELETE", self.manifest_entries(base), dv_name, expect=base.snapshot_id
+        return self._commit(
+            self.schema(), "DELETE", [], dv_index=dv_name, expect=base.snapshot_id
         )
 
     # -- write path --------------------------------------------------------
@@ -986,8 +768,8 @@ class Table:
                 raise ValueError("table has no snapshots")
             hits = self._dv_hits(df.select(*schema.primary_keys))
             dv_name = self._write_dv_index(hits, base)
-            return self._commit_meta(
-                "DELETE", self.manifest_entries(base), dv_name,
+            return self._commit(
+                schema, "DELETE", [], dv_index=dv_name,
                 expect=base.snapshot_id, changelog=clg_name,
             )
         engine = schema.options.get("merge-engine", "deduplicate")
@@ -1162,11 +944,6 @@ class Table:
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-        next_id = base.snapshot_id + 1
-        staging = os.path.join(self.path, "staging", uuid.uuid4().hex)
-        new_entries = self._write_data_files(
-            df, schema, next_id, "I" if pk else None, staging, prefix="cpt"
-        )
         keep = [
             e
             for e in entries
@@ -1189,15 +966,21 @@ class Table:
                     os.path.join(self._dv_root(), name)
                 )
                 new_dv = name
-        cur = self.snapshot()
-        if cur.snapshot_id != base.snapshot_id:
-            raise CommitConflict(
-                "concurrent commit during bucket compaction — retry"
+        staging = os.path.join(self.path, "staging", uuid.uuid4().hex)
+        try:
+            new_entries = self._write_data_files(
+                df, schema, base.snapshot_id + 1, "I" if pk else None, staging,
+                prefix="cpt",
             )
-        return self._commit_manifest(
-            schema, next_id, "COMPACT", keep + new_entries,
-            dv_index=new_dv, bucket_index=base.bucket_index,
-        )
+            # a concurrent commit conflicts: the groups were merged against
+            # `base`, so they cannot be re-stacked on a newer manifest
+            return self._commit(
+                schema, "COMPACT", keep + new_entries, replace=True,
+                dv_index=new_dv, bucket_index=base.bucket_index,
+                expect=base.snapshot_id,
+            )
+        finally:
+            _rmtree_quiet(staging)
 
     def _maybe_auto_compact(self, schema: TableSchema) -> None:
         """Writer-side automatic compaction: with
@@ -1256,7 +1039,8 @@ class Table:
                 if e.get("stats", {}).get(cl, {}).get("max") is not None
             ]
             if mns and mxs:
-                bounds[cl] = (float(min(mns)), float(max(mxs)))
+                # float() per value: decimal stats are stored as strings
+                bounds[cl] = (min(map(float, mns)), max(map(float, mxs)))
             else:  # no stats (e.g. all-null column): single data pass fallback
                 row = df.agg(
                     F.min(cl).cast("double"), F.max(cl).cast("double")
@@ -1293,25 +1077,14 @@ class Table:
         want = {k: str(v) for k, v in partition_values.items()}
         if self.snapshot() is None:
             raise ValueError("table has no snapshots")
-        for _attempt in range(5):
-            prev = self.snapshot()
-            next_id = (prev.snapshot_id + 1) if prev else 1
-            # recomputed per attempt so a racing writer's files survive
-            kept = [
-                e
-                for e in self.manifest_entries(prev)
-                if any(e["partition"].get(k) != v for k, v in want.items())
-            ]
-            try:
-                # surviving partitions keep their deletion vectors and
-                # bucket assignments (entries for dropped files are inert)
-                return self._commit_manifest(
-                    schema, next_id, "DROP_PARTITION", kept,
-                    dv_index=prev.dv_index, bucket_index=prev.bucket_index,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict("gave up after 5 retries")
+        # surviving partitions keep their deletion vectors and bucket
+        # assignments (entries for dropped files are inert)
+        return self._commit(
+            schema, "DROP_PARTITION", [],
+            replace=lambda e: all(
+                e["partition"].get(k) == v for k, v in want.items()
+            ),
+        )
 
     def expire_partitions(
         self,
@@ -1363,32 +1136,18 @@ class Table:
             except (ValueError, TypeError):
                 return None
 
-        if self.snapshot() is None:
-            return []
-        for _attempt in range(5):
-            prev = self.snapshot()
-            entries = self.manifest_entries(prev)
-            expired_parts: dict[str, dict] = {}
-            kept = []
-            for e in entries:
-                ms = value_ms(e["partition"].get(key))
-                if ms is not None and ms < cutoff_ms:
-                    expired_parts[json.dumps(e["partition"], sort_keys=True)] = e[
-                        "partition"
-                    ]
-                else:
-                    kept.append(e)
-            if not expired_parts:
-                return []
-            try:
-                self._commit_manifest(
-                    self.schema(), prev.snapshot_id + 1, "DROP_PARTITION", kept,
-                    dv_index=prev.dv_index, bucket_index=prev.bucket_index,
-                )
-                return list(expired_parts.values())
-            except CommitConflict:
-                continue
-        raise CommitConflict("gave up after 5 retries")
+        def expired(e: dict) -> bool:
+            ms = value_ms(e["partition"].get(key))
+            return ms is not None and ms < cutoff_ms
+
+        parts = {
+            json.dumps(e["partition"], sort_keys=True): e["partition"]
+            for e in self.manifest_entries()
+            if expired(e)
+        }
+        if parts:
+            self._commit(schema, "DROP_PARTITION", [], replace=expired)
+        return list(parts.values())
 
     def overwrite(self, df: DataFrame) -> Snapshot:
         """Replace the whole table contents in one atomic commit."""
@@ -1420,51 +1179,6 @@ class Table:
             df, kind="OVERWRITE", row_kind=kind, replace="dynamic",
             bucket_index=b_name,
         )
-
-    # -- consumers: streaming-reader progress pins (Paimon consumer-id) ----
-
-    def _consumer_path(self, name: str) -> str:
-        return os.path.join(self.meta_path, "consumer", f"consumer-{name}.json")
-
-    def register_consumer(self, name: str, next_snapshot: int | None = None) -> None:
-        """Record that reader `name` still needs snapshots >= `next_snapshot`
-        (default: the snapshot after the current one). ``expire_snapshots``
-        keeps every snapshot any consumer has yet to read — so a lagging
-        streaming reader never loses unread commits to retention (Paimon's
-        ``consumer-id`` mechanism)."""
-        if not name or "/" in name or "$" in name:
-            raise ValueError(f"invalid consumer name {name!r}")
-        if next_snapshot is None:
-            cur = self.snapshot()
-            next_snapshot = (cur.snapshot_id + 1) if cur else 1
-        os.makedirs(os.path.join(self.meta_path, "consumer"), exist_ok=True)
-        tmp = self._consumer_path(name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"next_snapshot": int(next_snapshot),
-                 "update_ms": int(time.time() * 1000)},
-                fh,
-            )
-        os.replace(tmp, self._consumer_path(name))
-
-    def drop_consumer(self, name: str) -> None:
-        try:
-            os.remove(self._consumer_path(name))
-        except FileNotFoundError:
-            raise ValueError(f"consumer {name!r} does not exist") from None
-
-    def list_consumers(self) -> dict[str, int]:
-        cdir = os.path.join(self.meta_path, "consumer")
-        if not os.path.isdir(cdir):
-            return {}
-        out = {}
-        for fn in sorted(os.listdir(cdir)):
-            if fn.startswith("consumer-") and fn.endswith(".json"):
-                with open(os.path.join(cdir, fn)) as fh:
-                    out[fn[len("consumer-") : -len(".json")]] = json.load(fh)[
-                        "next_snapshot"
-                    ]
-        return out
 
     def consumers_df(self) -> DataFrame:
         rows = [(k, v) for k, v in self.list_consumers().items()]
@@ -1798,11 +1512,6 @@ class Table:
     #    and system table; the reference imports the engine's statistics
     #    SPI but leaves it unwired, PrestoMetadata.java:50) -----------------
 
-    def _stats_path(self, snapshot_id: int) -> str:
-        return os.path.join(
-            self.meta_path, "statistics", f"stats-{snapshot_id}.json"
-        )
-
     def analyze(
         self,
         columns: list[str] | None = None,
@@ -1940,9 +1649,6 @@ class Table:
     # -- branches: writable metadata forks sharing data files (Paimon
     #    branch feature; metadata-only cost) --------------------------------
 
-    def _branch_dir(self, name: str) -> str:
-        return os.path.join(self.path, "branch", f"branch-{name}")
-
     def create_branch(
         self,
         name: str,
@@ -1975,12 +1681,6 @@ class Table:
         os.makedirs(os.path.join(bdir, "manifest"))
         for fn in os.listdir(sdir):  # all schema versions (files reference them)
             _copyfile(os.path.join(sdir, fn), os.path.join(bdir, "schema", fn))
-        with open(
-            os.path.join(bdir, "snapshot", f"snapshot-{snap.snapshot_id}.json"), "w"
-        ) as fh:
-            json.dump(snap.to_json(), fh)
-        with open(os.path.join(bdir, "snapshot", "LATEST"), "w") as fh:
-            fh.write(str(snap.snapshot_id))
         for m in self._manifest_members(snap):
             _copyfile(
                 os.path.join(self.meta_path, "manifest", m),
@@ -1992,20 +1692,12 @@ class Table:
                  "create_ms": int(time.time() * 1000)},
                 fh,
             )
-        return Table(self.spark, self.path, branch=name)
+        b = Table(self.spark, self.path, branch=name)
+        b._publish(snap)
+        return b
 
     def branch(self, name: str) -> "Table":
-        if not os.path.isdir(self._branch_dir(name)):
-            raise ValueError(f"branch {name!r} does not exist")
         return Table(self.spark, self.path, branch=name)
-
-    def list_branches(self) -> list[str]:
-        bdir = os.path.join(self.path, "branch")
-        if not os.path.isdir(bdir):
-            return []
-        return sorted(
-            d[len("branch-"):] for d in os.listdir(bdir) if d.startswith("branch-")
-        )
 
     def delete_branch(self, name: str) -> None:
         """Drop a branch's metadata. Data files only it referenced become
@@ -2061,120 +1753,9 @@ class Table:
                 dst = os.path.join(self.meta_path, "manifest", m)
                 if not os.path.exists(dst):
                     _copyfile(os.path.join(b.meta_path, "manifest", m), dst)
-            spath = os.path.join(self.meta_path, "snapshot", f"snapshot-{sid}.json")
-            try:
-                fd = os.open(spath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError as exc:  # concurrent main commit raced us
-                raise CommitConflict(str(exc)) from exc
-            with os.fdopen(fd, "w") as fh:
-                json.dump(snap.to_json(), fh)
+            self._publish(snap)  # CommitConflict if a main commit raced us
             last = snap
-        tmp = os.path.join(self.meta_path, "snapshot", f".LATEST.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(str(last.snapshot_id))
-        os.replace(tmp, os.path.join(self.meta_path, "snapshot", "LATEST"))
         return last
-
-    def expire_snapshots(self, keep_last: int = 10) -> list[int]:
-        """Drop snapshots older than the newest `keep_last`, deleting data
-        files no surviving snapshot references (the standard lakehouse
-        retention op — bounds metadata growth and reclaims storage from
-        compaction/overwrite churn). Time travel remains valid for every
-        kept snapshot; expired ids raise on access. Returns expired ids.
-        """
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1")
-        ids = self.snapshot_ids()
-        expired = ids[:-keep_last]
-        # Consumers pin every snapshot they have yet to read: a consumer at
-        # next_snapshot=N needs N and everything after it. A consumer not
-        # updated within ``consumer.expiration-time`` is dropped first
-        # (Paimon's stale-consumer expiry) — a crashed reader must not pin
-        # retention forever.
-        ttl = self.schema().options.get("consumer.expiration-time")
-        if ttl is not None:
-            cutoff = int(time.time() * 1000) - _parse_duration_ms(ttl)
-            for name in list(self.list_consumers()):
-                with open(self._consumer_path(name)) as fh:
-                    if json.load(fh).get("update_ms", 0) < cutoff:
-                        self.drop_consumer(name)
-        consumers = self.list_consumers()
-        if consumers:
-            floor = min(consumers.values())
-            expired = [i for i in expired if i < floor]
-        if not expired:
-            return []
-        kept = [i for i in ids if i not in set(expired)]
-        live_files = set()
-        live_manifests = set()
-        live_dv = set()
-        # Tagged snapshots stay readable after expiry (the tag file carries
-        # the snapshot payload), so their manifests and data files are live.
-        live_snaps = [self.snapshot(sid) for sid in kept] + [
-            self.tag_snapshot(name) for name in self.list_tags()
-        ]
-        for snap in live_snaps:
-            live_manifests.update(self._manifest_members(snap))
-            if snap.dv_index:
-                live_dv.add(snap.dv_index)
-            if snap.bucket_index:
-                live_dv.add(snap.bucket_index)
-            for e in self.manifest_entries(snap):
-                live_files.add(e["path"])
-        # Data files are shared across lineages: anything ANY other branch
-        # (or main, when expiring on a branch) references stays live. Their
-        # manifests/snapshots live in their own directories and are untouched.
-        main = Table(self.spark, self.path)
-        others = [main] if self.branch_name is not None else []
-        others += [
-            main.branch(n)
-            for n in main.list_branches()
-            if n != self.branch_name
-        ]
-        for t in others:
-            for snap in (
-                [t.snapshot(sid) for sid in t.snapshot_ids()]
-                + [t.tag_snapshot(nm) for nm in t.list_tags()]
-            ):
-                if snap.dv_index:
-                    live_dv.add(snap.dv_index)
-                if snap.bucket_index:
-                    live_dv.add(snap.bucket_index)
-                for e in t.manifest_entries(snap):
-                    live_files.add(e["path"])
-        dead_files = set()
-        dead_manifests = set()
-        dead_dv = set()
-        for sid in expired:
-            snap = self.snapshot(sid)
-            dead_manifests.update(self._manifest_members(snap))
-            if snap.dv_index and snap.dv_index not in live_dv:
-                dead_dv.add(snap.dv_index)
-            if snap.bucket_index and snap.bucket_index not in live_dv:
-                dead_dv.add(snap.bucket_index)
-            for e in self.manifest_entries(snap):
-                if e["path"] not in live_files:
-                    dead_files.add(e["path"])
-        for rel in dead_files:
-            try:
-                os.remove(os.path.join(self.path, rel))
-            except FileNotFoundError:
-                pass
-        for m in dead_manifests - live_manifests:
-            try:
-                os.remove(os.path.join(self.meta_path, "manifest", m))
-            except FileNotFoundError:
-                pass
-        for dv in dead_dv:
-            _rmtree_quiet(os.path.join(self._dv_root(), dv))
-        for sid in expired:
-            snap = self.snapshot(sid)
-            if snap.changelog:
-                _rmtree_quiet(
-                    os.path.join(self.meta_path, "changelog", snap.changelog)
-                )
-            os.remove(os.path.join(self.meta_path, "snapshot", f"snapshot-{sid}.json"))
-        return expired
 
     def truncate(self) -> Snapshot:
         """TRUNCATE TABLE: one atomic commit with an empty manifest.
@@ -2182,55 +1763,7 @@ class Table:
         is reclaimed then, not now — O(1) regardless of table size."""
         if self.snapshot() is None:
             raise ValueError("table has no snapshots")
-        schema = self.schema()
-        for _attempt in range(5):
-            prev = self.snapshot()
-            next_id = (prev.snapshot_id + 1) if prev else 1
-            try:
-                return self._commit_manifest(schema, next_id, "TRUNCATE", [])
-            except CommitConflict:
-                continue
-        raise CommitConflict("gave up after 5 retries")
-
-    def rollback_to(self, snapshot_id: int) -> None:
-        """Roll the table back to `snapshot_id`: snapshots after it are
-        deleted (Paimon's ``rollback_to`` procedure). Metadata-only —
-        data files written by rolled-back commits become orphans and are
-        reclaimed by ``remove_orphan_files``, so rollback is O(#snapshots)
-        regardless of data size.
-
-        Bookkeeping that referenced the rolled-back range is reconciled
-        the way Paimon's RollbackHelper does: tags pinned to deleted
-        snapshots are dropped; consumer positions past the new head are
-        clamped to it (their unread commits no longer exist).
-        """
-        ids = self.snapshot_ids()
-        if snapshot_id not in ids:
-            raise ValueError(f"snapshot {snapshot_id} does not exist (have {ids})")
-        doomed = [i for i in ids if i > snapshot_id]
-        for name in self.list_tags():
-            if self.tag_snapshot(name).snapshot_id > snapshot_id:
-                self.delete_tag(name)
-        for name, nxt in self.list_consumers().items():
-            if nxt > snapshot_id + 1:
-                self.register_consumer(name, snapshot_id + 1)
-        for sid in doomed:
-            snap = self.snapshot(sid)
-            if snap.changelog:
-                _rmtree_quiet(
-                    os.path.join(self.meta_path, "changelog", snap.changelog)
-                )
-            os.remove(
-                os.path.join(self.meta_path, "snapshot", f"snapshot-{sid}.json")
-            )
-            try:
-                os.remove(self._stats_path(sid))
-            except FileNotFoundError:
-                pass
-        tmp = os.path.join(self.meta_path, "snapshot", f".LATEST.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(str(snapshot_id))
-        os.replace(tmp, os.path.join(self.meta_path, "snapshot", "LATEST"))
+        return self._commit(self.schema(), "TRUNCATE", [], replace=True)
 
     def incremental_between_timestamps(
         self, start_ms: int, end_ms: int | None = None
@@ -2443,97 +1976,6 @@ class Table:
             json.dump(s.to_json(), fh, indent=2)
         return self.compact()
 
-    def remove_orphan_files(self, older_than_ms: int | None = None) -> list[str]:
-        """Delete data files no lineage references (Paimon's
-        remove-orphan-files action): files stranded by deleted branches,
-        crashed writers, or interrupted commits.
-
-        `older_than_ms` (epoch millis) guards in-flight writers: only files
-        modified before it are candidates (default: one hour ago). Scans
-        every snapshot and tag of every lineage — O(metadata), one listdir
-        walk over data/. Returns the deleted paths (table-relative)."""
-        if older_than_ms is None:
-            older_than_ms = int((time.time() - 3600) * 1000)
-        main = Table(self.spark, self.path)
-        lineages = [main] + [main.branch(n) for n in main.list_branches()]
-        live = set()
-        live_dv = set()
-        for t in lineages:
-            snaps = [t.snapshot(sid) for sid in t.snapshot_ids()] + [
-                t.tag_snapshot(nm) for nm in t.list_tags()
-            ]
-            for snap in snaps:
-                if snap.dv_index:
-                    live_dv.add(snap.dv_index)
-                if snap.bucket_index:
-                    live_dv.add(snap.bucket_index)
-                for e in t.manifest_entries(snap):
-                    live.add(e["path"])
-        data_dir = os.path.join(self.path, "data")
-        removed = []
-        for root, _dirs, files in os.walk(data_dir):
-            for fn in files:
-                full = os.path.join(root, fn)
-                rel = os.path.relpath(full, self.path)
-                if rel in live:
-                    continue
-                if os.path.getmtime(full) * 1000 >= older_than_ms:
-                    continue  # too fresh — may belong to an in-flight commit
-                os.remove(full)
-                removed.append(rel)
-        # deletion-vector index datasets no snapshot of any lineage points at
-        dv_root = self._dv_root()
-        if os.path.isdir(dv_root):
-            for name in os.listdir(dv_root):
-                full = os.path.join(dv_root, name)
-                if name in live_dv:
-                    continue
-                if os.path.getmtime(full) * 1000 >= older_than_ms:
-                    continue
-                _rmtree_quiet(full)
-                removed.append(os.path.relpath(full, self.path))
-        # staging dirs abandoned by crashed writers (a completed commit
-        # removes its staging dir; anything old enough here is dead weight)
-        staging_root = os.path.join(self.path, "staging")
-        if os.path.isdir(staging_root):
-            for name in os.listdir(staging_root):
-                full = os.path.join(staging_root, name)
-                if os.path.getmtime(full) * 1000 >= older_than_ms:
-                    continue
-                _rmtree_quiet(full)
-                removed.append(os.path.relpath(full, self.path))
-        # DataSource writers stage under .staging-ds-* at the table root
-        for name in os.listdir(self.path):
-            if name.startswith(".staging-ds-"):
-                full = os.path.join(self.path, name)
-                if os.path.getmtime(full) * 1000 >= older_than_ms:
-                    continue
-                _rmtree_quiet(full)
-                removed.append(name)
-        return sorted(removed)
-
-    def _commit_meta(
-        self, kind: str, entries: list[dict], dv_index: str | None,
-        expect: int | None = None, changelog: str | None = None,
-    ) -> Snapshot:
-        """Metadata-only commit (no new data files) — DV deletes. `expect`
-        guards against committing positions computed on a stale snapshot:
-        a concurrent commit means the positions may be wrong, so conflict
-        instead of stacking."""
-        schema = self.schema()
-        prev = self.snapshot()
-        cur = prev.snapshot_id if prev else 0
-        if expect is not None and cur != expect:
-            raise CommitConflict(
-                f"deletion-vector commit computed against snapshot {expect}, "
-                f"but latest is now {cur} — recompute and retry"
-            )
-        return self._commit_manifest(
-            schema, cur + 1, kind, entries, dv_index=dv_index,
-            bucket_index=prev.bucket_index if prev else None,
-            changelog=changelog,
-        )
-
     def _commit_write(
         self,
         df: DataFrame,
@@ -2546,18 +1988,9 @@ class Table:
         changelog: str | None = None,
         commit_identifier: int | None = None,
     ) -> Snapshot:
-        """`replace`: False stacks on the previous manifest, True replaces it
-        entirely, "dynamic" replaces only the partitions the new files touch.
-
-        `dv_index` attaches a deletion-vector index to the new snapshot;
-        when absent and not replacing, the previous snapshot's index is
-        carried forward (old files keep their deletions). A full replace
-        rewrites from the merged state, so the index resets.
-        `bucket_index` likewise attaches a dynamic-bucket key index; when
-        absent it ALWAYS carries forward (bucket assignments outlive any
-        rewrite — a key's bucket never changes). `expect` conflicts if the
-        latest snapshot moved past it (DV/bucket commits compute state
-        against a specific snapshot and cannot be re-stacked)."""
+        """Write `df` as data files and commit them (``TableMeta._commit``,
+        which documents `replace`, `dv_index`, `bucket_index` and
+        `expect`)."""
         schema = self.schema()
         expected = schema.field_names()
         missing = [c for c in expected if c.lower() not in {x.lower() for x in df.columns}]
@@ -2596,49 +2029,18 @@ class Table:
         staging = os.path.join(self.path, "staging", uuid.uuid4().hex)
         # compaction rewrites carry a distinct name prefix so streaming
         # changelog readers (file-glob based) never re-consume a rewrite
-        new_entries = self._write_data_files(
-            df, schema, next_id, row_kind, staging,
-            prefix="cpt" if kind == "COMPACT" else "data",
-        )
-        # Data files are written once; only the metadata commit retries. A
-        # conflict means another writer claimed our snapshot id — re-read the
-        # new latest manifest and stack our entries on top of it.
-        touched = {json.dumps(e["partition"], sort_keys=True) for e in new_entries}
-        for _attempt in range(5):
-            prev = self.snapshot()
-            next_id = (prev.snapshot_id + 1) if prev else 1
-            if expect is not None and (prev.snapshot_id if prev else 0) != expect:
-                raise CommitConflict(
-                    f"deletion-vector commit computed against snapshot {expect}, "
-                    f"but latest is now {prev.snapshot_id if prev else 0}"
-                )
-            dv = dv_index
-            if dv is None and replace is not True and prev is not None:
-                dv = prev.dv_index  # carry existing deletions forward
-            bidx = bucket_index
-            if bidx is None and prev is not None:
-                bidx = prev.bucket_index  # assignments survive any rewrite
-            if prev is None or replace is True:
-                base = []
-            elif replace == "dynamic":
-                base = [
-                    e
-                    for e in self.manifest_entries(prev)
-                    if json.dumps(e["partition"], sort_keys=True) not in touched
-                ]
-            else:
-                base = self.manifest_entries(prev)
-            try:
-                return self._commit_manifest(
-                    schema, next_id, kind, base + new_entries, dv_index=dv,
-                    bucket_index=bidx, changelog=changelog,
-                    commit_identifier=commit_identifier,
-                )
-            except CommitConflict:
-                if expect is not None:
-                    raise
-                continue
-        raise CommitConflict("gave up after 5 retries")
+        try:
+            new_entries = self._write_data_files(
+                df, schema, next_id, row_kind, staging,
+                prefix="cpt" if kind == "COMPACT" else "data",
+            )
+            return self._commit(
+                schema, kind, new_entries, replace=replace, dv_index=dv_index,
+                bucket_index=bucket_index, expect=expect, changelog=changelog,
+                commit_identifier=commit_identifier,
+            )
+        finally:
+            _rmtree_quiet(staging)
 
     def _write_data_files(
         self,
@@ -2683,11 +2085,7 @@ class Table:
             raise ValueError(
                 f"unsupported file.format {fmt!r}; expected parquet, orc or avro"
             )
-        statable = {
-            f["name"]
-            for f in schema.fields
-            if not f["type"].startswith(("array", "map", "struct", "binary"))
-        }
+        statable = _statable(schema)
         if fmt == "avro":
             # no JVM avro DataSource in this distribution — executor-side
             # pure-Python container writer, stats computed in the same pass
@@ -2704,9 +2102,8 @@ class Table:
             writer.format(fmt).save(staging)
             avro_stats = {}
 
-        # register written files: move into data/, collect footer stats
-        data_dir = os.path.join(self.path, "data")
-        os.makedirs(data_dir, exist_ok=True)
+        # register written files: footer stats and their data/ home (the
+        # commit moves them there)
         # bloom file index (file-index.bloom-filter.columns): built here in
         # the same registration pass that reads footer stats. Indexable
         # types only (ints/strings/bools — plans.fileindex.bloom_key);
@@ -2747,9 +2144,6 @@ class Table:
                         elif k.startswith(PART_DIR_PREFIX):
                             partition[k[len(PART_DIR_PREFIX) :]] = v
                 name = f"{prefix}-{snapshot_id}-{uuid.uuid4().hex}.{fmt}"
-                dst_dir = os.path.join(data_dir, rel_partition) if rel_partition != "." else data_dir
-                os.makedirs(dst_dir, exist_ok=True)
-                dst = os.path.join(dst_dir, name)
                 if fmt == "parquet":
                     meta = pq.ParquetFile(src).metadata
                     stats = _footer_stats(meta, statable)
@@ -2763,13 +2157,15 @@ class Table:
                     # partition) — nothing to register
                     continue
                 fidx: dict[str, dict] = blooms.get(os.path.abspath(src), {})
-                os.rename(src, dst)
                 entry = {
-                    "path": os.path.relpath(dst, self.path),
+                    "path": os.path.normpath(
+                        os.path.join("data", rel_partition, name)
+                    ),
+                    "staged": src,
                     "partition": partition,
                     "bucket": bucket,
                     "row_count": n_rows,
-                    "file_size": os.path.getsize(dst),
+                    "file_size": os.path.getsize(src),
                     "schema_id": schema.schema_id,
                     "min_seq": snapshot_id,
                     "max_seq": snapshot_id,
@@ -2778,133 +2174,7 @@ class Table:
                 if fidx:
                     entry["index"] = fidx
                 entries.append(entry)
-        _rmtree_quiet(staging)
         return entries
-
-    def _write_manifest(
-        self, schema: TableSchema, snapshot_id: int, entries: list[dict]
-    ) -> str:
-        """Persist a snapshot's file listing, writing O(changed files).
-
-        Callers hand over the FULL entry list (simple to reason about);
-        this diffs it against the parent snapshot and persists only a
-        delta member plus a tiny manifest-list file — Paimon's base+delta
-        manifest design. At 100 TB (~800k files) a commit's manifest I/O
-        is a few KB instead of a few hundred MB. When the list reaches
-        ``manifest.full-compaction-threshold`` members (default 10), or
-        the delta would exceed the full listing, a fresh base is written
-        instead — bounding read-side fold cost to ~threshold small files.
-        """
-        mdir = os.path.join(self.meta_path, "manifest")
-        parent = (
-            self.snapshot(snapshot_id - 1)
-            if (snapshot_id - 1) in self.snapshot_ids()
-            else None
-        )
-        stamp = f"{snapshot_id}-{uuid.uuid4().hex}"
-
-        def write_full() -> str:
-            name = f"manifest-{stamp}.json"
-            with open(os.path.join(mdir, name), "w") as fh:
-                json.dump({"entries": entries}, fh, default=str)
-            return name
-
-        if parent is None:
-            return write_full()
-        prev_by = {e["path"]: e for e in self.manifest_entries(parent)}
-        new_by = {e["path"]: e for e in entries}
-        adds = [e for p, e in new_by.items() if prev_by.get(p) != e]
-        removes = [
-            p
-            for p in prev_by
-            if p not in new_by or prev_by[p] != new_by[p]
-        ]
-        members = self._manifest_members(parent)
-        members = members[1:] if len(members) > 1 else members
-        threshold = int(
-            schema.options.get("manifest.full-compaction-threshold", "10")
-        )
-        if (
-            len(members) + 1 >= threshold
-            or len(adds) + len(removes) >= max(len(entries), 1)
-        ):
-            return write_full()
-        delta_name = f"manifest-delta-{stamp}.json"
-        with open(os.path.join(mdir, delta_name), "w") as fh:
-            json.dump({"adds": adds, "removes": removes}, fh, default=str)
-        list_name = f"manifest-{stamp}.json"
-        with open(os.path.join(mdir, list_name), "w") as fh:
-            json.dump({"manifests": members + [delta_name]}, fh)
-        return list_name
-
-    def _commit_manifest(
-        self, schema: TableSchema, snapshot_id: int, kind: str, entries: list[dict],
-        dv_index: str | None = None, bucket_index: str | None = None,
-        changelog: str | None = None, commit_identifier: int | None = None,
-    ) -> Snapshot:
-        os.makedirs(os.path.join(self.meta_path, "manifest"), exist_ok=True)
-        os.makedirs(os.path.join(self.meta_path, "snapshot"), exist_ok=True)
-        manifest_name = self._write_manifest(schema, snapshot_id, entries)
-        snap = Snapshot(
-            snapshot_id=snapshot_id,
-            schema_id=schema.schema_id,
-            commit_user=os.environ.get("USER", "spark"),
-            commit_identifier=(
-                commit_identifier if commit_identifier is not None
-                else snapshot_id
-            ),
-            commit_kind=kind,
-            timestamp_ms=int(time.time() * 1000),
-            manifest=manifest_name,
-            total_rows=sum(e["row_count"] for e in entries),
-            dv_index=dv_index,
-            bucket_index=bucket_index,
-            changelog=changelog,
-        )
-        spath = os.path.join(self.meta_path, "snapshot", f"snapshot-{snapshot_id}.json")
-        try:
-            fd = os.open(spath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError as exc:  # concurrent commit won this id
-            raise CommitConflict(str(exc)) from exc
-        with os.fdopen(fd, "w") as fh:
-            json.dump(snap.to_json(), fh)
-        tmp = os.path.join(self.meta_path, "snapshot", f".LATEST.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(str(snapshot_id))
-        os.replace(tmp, os.path.join(self.meta_path, "snapshot", "LATEST"))
-        self._maybe_auto_tag(schema, snapshot_id)
-        self._maybe_auto_expire(schema)
-        return snap
-
-    def _maybe_auto_expire(self, schema: TableSchema) -> None:
-        """Paimon's per-commit snapshot retention: with
-        ``snapshot.num-retained.max`` and/or ``snapshot.time-retained``
-        set, every commit trims history to the policy (never below
-        ``snapshot.num-retained.min``, default 10) — no external cron.
-        Both criteria age from the oldest end, so the drop set is a
-        prefix and the standard expiry (which already respects tags,
-        consumers, and branches) applies. Cost O(#snapshots) metadata,
-        only when the options are set."""
-        o = schema.options
-        mx = o.get("snapshot.num-retained.max")
-        tr = o.get("snapshot.time-retained")
-        if mx is None and tr is None:
-            return
-        ids = self.snapshot_ids()
-        mn = int(o.get("snapshot.num-retained.min", "10"))
-        if mx is not None:
-            mn = min(mn, int(mx))
-        drop: set[int] = set()
-        if mx is not None and len(ids) > int(mx):
-            drop.update(ids[: len(ids) - int(mx)])
-        if tr is not None:
-            cutoff = int(time.time() * 1000) - _parse_duration_ms(tr)
-            for sid in ids[: max(0, len(ids) - mn)]:
-                if self.snapshot(sid).timestamp_ms < cutoff:
-                    drop.add(sid)
-        drop -= set(ids[len(ids) - mn:]) if mn > 0 else set()
-        if drop:
-            self.expire_snapshots(keep_last=len(ids) - len(drop))
 
     # -- read path ---------------------------------------------------------
 
@@ -2916,13 +2186,9 @@ class Table:
         partition_where: str | None = None,
         tag: str | None = None,
     ) -> "TableScan":
-        if tag is not None:
-            if snapshot_id is not None or as_of_timestamp_ms is not None:
-                raise ValueError("tag is exclusive with snapshot_id/as_of_timestamp_ms")
-            return TableScan(
-                self, predicate, None, None, partition_where, pinned=self.tag_snapshot(tag)
-            )
-        return TableScan(self, predicate, snapshot_id, as_of_timestamp_ms, partition_where)
+        return TableScan(
+            self, predicate, snapshot_id, as_of_timestamp_ms, partition_where, tag
+        )
 
     def to_df(self, **scan_kwargs) -> DataFrame:
         return self.scan(**scan_kwargs).to_df()
@@ -2946,129 +2212,19 @@ class Table:
           WITHIN files; partition-column predicates are constant per
           file, so whole-file counts stay exact).
         """
-        if tag is not None:
-            snap = self.tag_snapshot(tag)
-        else:
-            snap = (
-                self.snapshot(snapshot_id)
-                if snapshot_id is not None
-                else self.snapshot()
-            )
+        snap = self.resolve_snapshot(snapshot_id, tag=tag)
         if snap is None:
             return 0
         schema = self.schema(snap.schema_id)
         if schema.primary_keys or snap.dv_index:
             return None
-        entries = self.manifest_entries(snap)
-        if predicate is not None:
-            pks = set(schema.partition_keys)
-            if not predicate.references() <= pks:
-                return None
-            entries = [
-                e
-                for e in entries
-                if predicate.test_row(_typed_partition(e["partition"], schema))
-            ]
+        if predicate is not None and not (
+            predicate.references() <= set(schema.partition_keys)
+        ):
+            return None
+        entries, _ = self.plan_entries(snap, predicate, skip=False)
         return sum(e["row_count"] for e in entries)
 
-    # -- tags: named immutable snapshot references (Paimon TagManager
-    #    parity; surfaced through the same catalog `$` resolution the
-    #    reference relies on, PrestoMetadata.java:141) -----------------------
-
-    def _tag_path(self, name: str) -> str:
-        return os.path.join(self.meta_path, "tag", f"tag-{name}.json")
-
-    def create_tag(
-        self, name: str, snapshot_id: int | None = None, _auto: bool = False
-    ) -> None:
-        """Pin `name` to a snapshot (default: latest). The tag file stores the
-        FULL snapshot payload, so the tag keeps working after the snapshot
-        itself is expired — Paimon's tags have the same property."""
-        if not name or "/" in name or "$" in name:
-            raise ValueError(f"invalid tag name {name!r}")
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            raise ValueError("table has no snapshots")
-        os.makedirs(os.path.join(self.meta_path, "tag"), exist_ok=True)
-        path = self._tag_path(name)
-        if os.path.exists(path):
-            raise ValueError(f"tag {name!r} already exists")
-        payload = snap.to_json()
-        payload["tag_name"] = name
-        payload["tag_create_ms"] = int(time.time() * 1000)
-        if _auto:
-            payload["tag_auto"] = True
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh, indent=2)
-        os.rename(tmp, path)
-
-    _TAG_PERIOD_FORMATS = {"daily": "%Y-%m-%d", "hourly": "%Y-%m-%d %H"}
-
-    def _maybe_auto_tag(self, schema: TableSchema, snapshot_id: int) -> None:
-        """Paimon ``tag.automatic-creation=process-time``: after a commit,
-        ensure the current period (``tag.creation-period`` daily|hourly,
-        UTC) has a tag — the first commit of each period pins it, giving a
-        reproducible corpus revision per day/hour with zero operator
-        involvement. ``tag.num-retained-max`` prunes the OLDEST
-        auto-created tags and ``tag.default-time-retained`` expires
-        auto tags past their age (Paimon's auto-tag TTL); manual tags
-        are never touched by either."""
-        if schema.options.get("tag.automatic-creation") != "process-time":
-            return
-        period = schema.options.get("tag.creation-period", "daily")
-        fmt = self._TAG_PERIOD_FORMATS.get(period)
-        if fmt is None:
-            raise ValueError(f"unsupported tag.creation-period {period!r}")
-        name = time.strftime(fmt, time.gmtime())
-        if not os.path.exists(self._tag_path(name)):
-            self.create_tag(name, snapshot_id, _auto=True)
-        retain = schema.options.get("tag.num-retained-max")
-        ttl = schema.options.get("tag.default-time-retained")
-        if retain is None and ttl is None:
-            return
-        auto: list[tuple[str, int]] = []
-        for tag in self.list_tags():
-            with open(self._tag_path(tag)) as fh:
-                d = json.load(fh)
-            if d.get("tag_auto"):
-                auto.append((tag, int(d.get("tag_create_ms", 0))))
-        drop: set[str] = set()
-        if retain is not None:
-            drop.update(
-                t for t, _ in sorted(auto)[: max(0, len(auto) - int(retain))]
-            )
-        if ttl is not None:
-            cutoff = int(time.time() * 1000) - _parse_duration_ms(ttl)
-            drop.update(t for t, created in auto if created < cutoff)
-        for tag in drop:
-            self.delete_tag(tag)
-
-    def delete_tag(self, name: str) -> None:
-        try:
-            os.remove(self._tag_path(name))
-        except FileNotFoundError:
-            raise ValueError(f"tag {name!r} does not exist") from None
-
-    def list_tags(self) -> list[str]:
-        tdir = os.path.join(self.meta_path, "tag")
-        if not os.path.isdir(tdir):
-            return []
-        return sorted(
-            f[len("tag-") : -len(".json")]
-            for f in os.listdir(tdir)
-            if f.startswith("tag-") and f.endswith(".json")
-        )
-
-    def tag_snapshot(self, name: str) -> Snapshot:
-        try:
-            with open(self._tag_path(name)) as fh:
-                d = json.load(fh)
-        except FileNotFoundError:
-            raise ValueError(f"tag {name!r} does not exist") from None
-        return Snapshot(
-            **{k: d[k] for k in Snapshot.__dataclass_fields__ if k in d}
-        )
 
     # -- system tables (A14) ----------------------------------------------
 
@@ -3226,112 +2382,43 @@ class TableScan:
     """
 
     def __init__(self, table, predicate, snapshot_id, as_of_ts, partition_where,
-                 pinned: Snapshot | None = None):
+                 tag: str | None = None):
         self.table = table
         self.predicate = predicate
         self.snapshot_id = snapshot_id
         self.as_of_ts = as_of_ts
         self.partition_where = partition_where
-        self.pinned = pinned  # tag reads: snapshot payload came from the tag
+        self.tag = tag
         self.last_plan: dict[str, Any] = {}
 
     def _snapshot(self) -> Snapshot | None:
-        t = self.table
-        if self.pinned is not None:
-            return self.pinned
-        if self.snapshot_id is not None:
-            return t.snapshot(self.snapshot_id)
-        if self.as_of_ts is not None:
-            return t.snapshot_as_of(self.as_of_ts)
-        return t.snapshot()
+        return self.table.resolve_snapshot(self.snapshot_id, self.as_of_ts, self.tag)
 
     def plan_files(self) -> list[dict]:
+        """The planned files (``TableMeta.plan_entries``), with the SQL
+        partition expression as its extra partition filter."""
         t = self.table
         snap = self._snapshot()
         if snap is None:
             return []
-        entries = t.manifest_entries(snap)
-        total = len(entries)
-        schema = t.schema(snap.schema_id)
-
         # A21 session toggles (PrestoSessionProperties.java:35-79). Both
         # only WIDEN the file list — the predicate is re-applied as a
         # DataFrame filter, so results are invariant, exactly like the
         # reference's toggles (the engine Filter node stays on top).
         prune_on = properties.partition_prune_enabled(t.spark)
-        pushdown_on = properties.pushdown_enabled(t.spark)
-
-        # 1) partition pruning from the structured predicate (A10 first
-        #    half). Only the partition-column CONJUNCTS may prune: testing
-        #    the full predicate against a partition-only row would evaluate
-        #    value-column comparisons as False (missing column) and drop
-        #    every partition — AND(pt='X', val=5) must still scan pt='X'.
-        if prune_on and self.predicate is not None and schema.partition_keys:
-            pp = skip_safe_predicate(
-                self.predicate, set(schema.partition_keys)
-            )
-            if pp is not None:
-                entries = [
-                    e
-                    for e in entries
-                    if pp.test_row(_typed_partition(e["partition"], schema))
-                ]
-        # 2) expression-over-partition-value pruning (A10 flagship:
-        #    `upper(pt)='20241103'` — evaluate arbitrary SQL on the driver
-        #    against one row per partition; evaluation errors keep the
-        #    partition, mirroring the recoverable-error whitelist
-        #    (PrestoComputePushdown.java:499-509))
-        if prune_on and self.partition_where and schema.partition_keys:
-            keep = self._eval_partition_where(entries, schema)
-            if keep is not None:
-                entries = [
-                    e for e in entries if json.dumps(e["partition"], sort_keys=True) in keep
-                ]
-        pruned_partitions = len(entries)
-
-        # 3) per-file stats skipping (A7/A8). Merge-on-read safety: for a
-        #    pk table without deletion vectors, only key/partition columns
-        #    may skip files — a value-column skip could drop the file
-        #    holding a key's NEWEST version and resurrect a stale row
-        #    (see plans.predicate.skip_safe_predicate).
-        if pushdown_on and self.predicate is not None:
-            dv_on = schema.options.get("deletion-vectors.enabled") == "true"
-            safe = (
-                None
-                if (not schema.primary_keys or dv_on)
-                else set(schema.primary_keys) | set(schema.partition_keys)
-            )
-            sp = skip_safe_predicate(self.predicate, safe)
-            if sp is not None:
-                # stats/bloom are writer-name-keyed; translate through
-                # field ids (see fileindex.translate_entry_metadata)
-                cur_by_id = {f["id"]: f["name"] for f in schema.fields}
-                ws_fields: dict[int, list] = {}
-
-                def survives(e: dict) -> bool:
-                    sid = e["schema_id"]
-                    wf = ws_fields.get(sid)
-                    if wf is None:
-                        wf = t.schema(sid).fields
-                        ws_fields[sid] = wf
-                    stats, idx = fileindex.translate_entry_metadata(
-                        e, cur_by_id, wf
-                    )
-                    return sp.test_stats(stats, e["row_count"]) and (
-                        sp.test_index(idx)
-                    )
-
-                entries = [e for e in entries if survives(e)]
-        self.last_plan = {
-            "snapshot_id": snap.snapshot_id,
-            "total_files": total,
-            "after_partition_prune": pruned_partitions,
-            "after_stats_skip": len(entries),
-        }
+        entries, self.last_plan = t.plan_entries(
+            snap, self.predicate, prune=prune_on,
+            skip=properties.pushdown_enabled(t.spark),
+            where=self._eval_partition_where
+            if prune_on and self.partition_where else None,
+        )
         return entries
 
-    def _eval_partition_where(self, entries, schema) -> set[str] | None:
-        """Evaluate the residual SQL expression against one row per partition.
+    def _eval_partition_where(self, entries, schema) -> list[dict]:
+        """Expression-over-partition-value pruning (A10 flagship:
+        `upper(pt)='20241103'`): evaluate the residual SQL expression on the
+        driver against one row per partition, keeping the entries of the
+        partitions it may select.
 
         Conjunct-wise, like the reference (``PrestoComputePushdown.java:
         234-252`` decomposes the filter and evaluates *remaining
@@ -3340,13 +2427,15 @@ class TableScan:
         partition values alone (references non-partition columns, unknown
         function) is skipped — recoverable-error semantics (``:499-509``).
         """
+        if not schema.partition_keys:
+            return entries
         parts = {}
         for e in entries:
             parts[json.dumps(e["partition"], sort_keys=True)] = _typed_partition(
                 e["partition"], schema
             )
         if not parts:
-            return set()
+            return entries
         part_fields = [f for f in schema.fields if f["name"] in schema.partition_keys]
         sschema = T.StructType(
             [
@@ -3368,7 +2457,9 @@ class TableScan:
                 continue  # recoverable: this conjunct can't prune
             keep &= {r["__pkey"] for r in kept}
             any_applied = True
-        return keep if any_applied else None
+        if not any_applied:
+            return entries
+        return [e for e in entries if json.dumps(e["partition"], sort_keys=True) in keep]
 
     def to_df(self, merge: bool = True, keep_pos: bool = False) -> DataFrame:
         """`merge=False` keeps the raw change rows (system columns included)
@@ -3383,7 +2474,7 @@ class TableScan:
         time_travel = (
             self.snapshot_id is not None
             or self.as_of_ts is not None
-            or self.pinned is not None
+            or self.tag is not None
         )
         schema_latest = (
             t.schema(snap.schema_id) if (snap and time_travel) else t.schema()
@@ -3808,20 +2899,6 @@ def _project_to(
     return df.select(*cols)
 
 
-def _parse_duration_ms(spec: str) -> int:
-    """Paimon-style duration strings: ``7 d``, ``24 h``, ``30 min``,
-    ``45 s``, ``500 ms`` (unit optional whitespace, default ms)."""
-    s = spec.strip().lower()
-    units = [("ms", 1), ("min", 60_000), ("s", 1000), ("m", 60_000),
-             ("h", 3_600_000), ("d", 86_400_000)]
-    for suffix, mult in units:
-        if s.endswith(suffix):
-            num = s[: -len(suffix)].strip()
-            if num:
-                return int(float(num) * mult)
-    return int(float(s))
-
-
 def _split_conjuncts(expr: str) -> list[str]:
     """Split a SQL boolean expression on top-level ANDs (depth-0, outside
     string literals). Conservative: anything unsplittable stays whole."""
@@ -3852,28 +2929,6 @@ def _split_conjuncts(expr: str) -> list[str]:
         i += 1
     out.append(expr[start:].strip())
     return [c for c in out if c]
-
-
-def _typed_partition(partition: dict[str, str], schema: TableSchema) -> dict[str, Any]:
-    """Partition dir values (strings) → typed python values per schema."""
-    out: dict[str, Any] = {}
-    for f in schema.fields:
-        if f["name"] not in partition:
-            continue
-        raw = partition[f["name"]]
-        t = f["type"]
-        if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
-            out[f["name"]] = None
-        elif t in ("tinyint", "smallint", "int", "bigint") or _is_time_type(t):
-            # TIME partitions by its physical micros-since-midnight long
-            out[f["name"]] = int(raw)
-        elif t in ("float", "double"):
-            out[f["name"]] = float(raw)
-        elif t == "boolean":
-            out[f["name"]] = raw.lower() == "true"
-        else:
-            out[f["name"]] = raw
-    return out
 
 
 def _orc_file_stats(
@@ -3988,55 +3043,6 @@ def _build_file_blooms(
     return out
 
 
-def _footer_stats(meta, statable: set[str]) -> dict[str, dict]:
-    """Column min/max/null_count from a parquet footer (metadata only)."""
-    agg: dict[str, dict] = {}
-    for rg in range(meta.num_row_groups):
-        g = meta.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if name not in statable:
-                continue
-            try:
-                st = col.statistics
-            except Exception:
-                # pyarrow cannot extract stats for some physical types
-                # (e.g. fixed-len-byte-array decimals); no stats → no
-                # skipping for this column, which is always safe
-                continue
-            if st is None:
-                continue
-            a = agg.setdefault(name, {"min": None, "max": None, "null_count": 0})
-            try:
-                if st.has_min_max:
-                    mn, mx = _plain(st.min), _plain(st.max)
-                    a["min"] = mn if a["min"] is None else min(a["min"], mn)
-                    a["max"] = mx if a["max"] is None else max(a["max"], mx)
-            except Exception:
-                # pyarrow raises lazily on .min/.max for unsupported
-                # physical types (fixed-len-byte-array decimals)
-                pass
-            a["null_count"] += st.null_count or 0
-    return agg
-
-
-def _plain(v):
-    import datetime
-    import decimal
-
-    if isinstance(v, bytes):
-        try:
-            return v.decode("utf-8")
-        except UnicodeDecodeError:
-            return None
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    return v
-
-
 def _read_data_files(spark: SparkSession, fmt: str, files: list) -> DataFrame:
     """Load registered data files in their writer schema's format.
 
@@ -4053,13 +3059,3 @@ def _read_data_files(spark: SparkSession, fmt: str, files: list) -> DataFrame:
     return spark.read.format(fmt).load(files)
 
 
-def _rmtree_quiet(path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-
-
-def _copyfile(src: str, dst: str) -> None:
-    import shutil
-
-    shutil.copyfile(src, dst)

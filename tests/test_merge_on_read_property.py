@@ -17,6 +17,19 @@ commands = st.lists(
     min_size=1,
     max_size=5,
 )
+# the same commands, each through a drawn front end: the Table API or
+# format("paimon") (both commit through tablemeta's one core)
+front_commands = st.lists(
+    st.tuples(
+        st.sampled_from(["upsert", "delete"]),
+        st.sampled_from(["api", "datasource"]),
+        st.lists(
+            st.tuples(st.integers(0, 6), st.integers(0, 100)), min_size=1, max_size=4
+        ),
+    ),
+    min_size=1,
+    max_size=5,
+)
 
 
 @settings(
@@ -24,17 +37,26 @@ commands = st.lists(
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(cmds=commands)
+@given(cmds=front_commands)
 def test_mor_equals_dict_replay(spark, tmp_path_factory, cmds):
     from paimon_presto_spark.catalog import Catalog
+    from paimon_presto_spark.sources.datasource import PaimonDataSource
 
+    spark.dataSource.register(PaimonDataSource)
     wh = tmp_path_factory.mktemp("wh")
     c = Catalog(spark, str(wh))
     c.create_database("d", ignore_if_exists=True)
     t = c.create_table("d", "t", "k int, v int", primary_keys=["k"])
 
+    def ds(**opts):
+        r = spark.read.format("paimon").option("path", t.path)
+        for k, v in opts.items():
+            r = r.option(k, v)
+        return r.load()
+
     model: dict[int, int] = {}
-    for op, kvs in cmds:
+    states: dict[int, list] = {}  # snapshot id -> model after it
+    for op, front, kvs in cmds:
         # within one commit, later rows of the same key win — emulate by
         # dropping duplicate keys (keep last) before the write, which is the
         # deterministic contract we promise for a single batch
@@ -42,16 +64,27 @@ def test_mor_equals_dict_replay(spark, tmp_path_factory, cmds):
         for k, v in kvs:
             dedup[k] = v
         df = spark.createDataFrame(list(dedup.items()), "k int, v int")
+        if front == "api":
+            (t.upsert if op == "upsert" else t.delete)(df)
+        else:
+            w = df.write.format("paimon").option("path", t.path)
+            if op == "delete":
+                w = w.option("rowkind", "D")
+            w.mode("append").save()
         if op == "upsert":
-            t.upsert(df)
             model.update(dedup)
         else:
-            t.delete(df)
             for k in dedup:
                 model.pop(k, None)
+        states[t.snapshot().snapshot_id] = sorted(model.items())
 
-    got = sorted((r["k"], r["v"]) for r in t.to_df().collect())
-    assert got == sorted(model.items())
+    def rows(df):
+        return sorted((r["k"], r["v"]) for r in df.collect())
+
+    assert rows(t.to_df()) == rows(ds()) == sorted(model.items())
+    first = min(states)
+    assert rows(t.to_df(snapshot_id=first)) == states[first]
+    assert rows(ds(snapshot=str(first))) == states[first]
 
 
 pu_commands = st.lists(

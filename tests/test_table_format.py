@@ -1569,21 +1569,34 @@ class TestLookupChangelogProducer:
         assert t.changelog_df(2).count() == 2
 
 
+def _upsert_via(front, spark, t, df):
+    """Upsert through the Table API or the ``format("paimon")`` writer —
+    both commit through the same core, hooks included."""
+    if front == "api":
+        t.upsert(df)
+        return
+    from paimon_presto_spark.sources.datasource import PaimonDataSource
+
+    spark.dataSource.register(PaimonDataSource)
+    df.write.format("paimon").option("path", t.path).mode("append").save()
+
+
 class TestAutoTagsAndRo:
-    def test_auto_tag_creation_and_retention(self, spark, catalog):
+    @pytest.mark.parametrize("front", ["api", "datasource"])
+    def test_auto_tag_creation_and_retention(self, spark, catalog, front):
         import time as _time
 
         t = catalog.create_table(
-            "default", "att", "k int, v string", primary_keys=["k"],
+            "default", f"att_{front}", "k int, v string", primary_keys=["k"],
             options={"tag.automatic-creation": "process-time",
                      "tag.creation-period": "daily"},
         )
         ddl = "k int, v string"
         today = _time.strftime("%Y-%m-%d", _time.gmtime())
-        t.upsert(spark.createDataFrame([(1, "a")], ddl))
+        _upsert_via(front, spark, t, spark.createDataFrame([(1, "a")], ddl))
         assert t.list_tags() == [today]
         # same period: second commit does not move or duplicate the tag
-        t.upsert(spark.createDataFrame([(2, "b")], ddl))
+        _upsert_via(front, spark, t, spark.createDataFrame([(2, "b")], ddl))
         assert t.list_tags() == [today]
         assert t.tag_snapshot(today).snapshot_id == 1
         # the tag serves reproducible time travel to the period's pin
@@ -1777,13 +1790,14 @@ class TestConcurrentCommits:
 
 
 class TestAutoExpiry:
-    def test_num_retained_max(self, spark, catalog):
+    @pytest.mark.parametrize("front", ["api", "datasource"])
+    def test_num_retained_max(self, spark, catalog, front):
         t = catalog.create_table(
-            "default", "ae1", "k int", primary_keys=["k"],
+            "default", f"ae1_{front}", "k int", primary_keys=["k"],
             options={"snapshot.num-retained.max": "3"},
         )
         for i in range(6):
-            t.upsert(spark.createDataFrame([(i,)], "k int"))
+            _upsert_via(front, spark, t, spark.createDataFrame([(i,)], "k int"))
         assert t.snapshot_ids() == [4, 5, 6]
         assert t.to_df().count() == 6  # data intact, history trimmed
 
