@@ -294,7 +294,19 @@ class PaimonReader(DataSourceReader):
         if snap is None:
             return [PaimonPartition([], None, core.schema().to_json(), {})]
         entries, _ = core.plan_entries(snap, self.predicate)
-        if core.schema(snap.schema_id).primary_keys:
+        schema = core.schema(snap.schema_id)
+        if schema.options.get("merge-engine") == "aggregation":
+            for f in schema.fields:
+                fn = schema.options.get(f"fields.{f['name']}.aggregate-function")
+                if f["name"] not in schema.primary_keys and fn not in (
+                    None, *_ARROW_AGGREGATES
+                ):
+                    raise ValueError(
+                        f"format('paimon') cannot merge aggregate-function "
+                        f"{fn!r} of field {f['name']!r}; read the table "
+                        f"through Table.to_df()"
+                    )
+        if schema.primary_keys:
             # one split per (partition, bucket): every version of a key
             # lives in its bucket, so the split merges on its own
             def key(e):
@@ -416,6 +428,11 @@ def _project_arrow(tbl, writer_schema: dict, reader_schema: dict):
     return pa.table(dict(zip(names, cols)))
 
 
+# the aggregate functions _merge_arrow implements (PaimonReader.partitions
+# rejects the others, which only Table.to_df reads)
+_ARROW_AGGREGATES = ("sum", "max", "min", "count", "last_non_null", "collect", "merge_map")
+
+
 def _merge_arrow(tbl, schema: dict, engine: str):
     """Per-bucket merge-on-read in Arrow/pandas (no shuffle — every version
     of a key is in this bucket by the write-side hash contract)."""
@@ -512,7 +529,9 @@ def _merge_arrow(tbl, schema: dict, engine: str):
                 aggs[c] = _merge_map
             else:
                 aggs[c] = {
-                    "sum": "sum", "max": "max", "min": "min", "count": "count",
+                    # an all-NULL sum stays NULL, as in Table.to_df
+                    "sum": lambda s: s.sum(min_count=1),
+                    "max": "max", "min": "min", "count": "count",
                     "last_non_null": lambda s: s.dropna().iloc[-1] if s.notna().any() else None,
                 }[fn]
         pdf = pdf.groupby(pks, as_index=False, sort=False).agg(aggs)
@@ -822,34 +841,31 @@ class PaimonStreamWriter(PaimonWriter, DataSourceStreamWriter):
 class PaimonStreamPartition(InputPartition):
     def __init__(
         self,
-        mode: str,  # "files" | "clg" | "dvdiff"
-        schema: dict,
-        seq: int,
-        files: list[tuple[str, int]] | None = None,  # (abs path, schema_id)
-        positions: dict[str, tuple[int, list[int]]] | None = None,
-        clg_dir: str | None = None,
-        writer_schemas: dict[int, dict] | None = None,  # schema_id -> JSON
+        seq: int,  # the committing snapshot id
+        schema: dict,  # the latest schema JSON: every commit renders in it
+        # (absolute path, writer schema JSON, positions): a data or
+        # changelog file, or with positions only those rows of a data
+        # file, which the commit marked deleted
+        files: list[tuple[str, dict, list[int] | None]],
     ):
-        self.mode = mode
-        self.schema = schema
-        self.writer_schemas = writer_schemas or {}
         self.seq = seq
-        self.files = files or []
-        self.positions = positions or {}
-        self.clg_dir = clg_dir
+        self.schema = schema
+        self.files = files
 
 
 class PaimonStreamReader(DataSourceStreamReader):
     """Snapshot-range streaming source (``spark.readStream.format("paimon")``).
 
     Offsets are snapshot ids — the natural exactly-once unit of this
-    format: ``latestOffset`` is a driver-side metadata read, each
-    micro-batch covers the commits in ``(start, end]``, and COMPACT
-    commits are skipped (rewrites are not new data — same contract as
-    ``Table.incremental_df``). Tables with ``changelog-producer=lookup``
+    format: ``latestOffset`` is a driver-side metadata read, and each
+    micro-batch streams the commits in ``(start, end]`` as planned by
+    ``TableMeta.changes`` (COMPACT commits skipped, the same change feed
+    as ``Table.incremental_df``). Tables with ``changelog-producer=lookup``
     stream their materialized retraction changelog (I/UB/UA/D);
     deletion-vector commits re-emit newly-deleted positions as D rows,
-    so consumers always see a lossless change stream.
+    so consumers always see a lossless change stream. Every commit is
+    projected by field id into the latest schema, the one
+    ``PaimonDataSource.schema`` declares.
 
     ``option("consumer-id", name)`` records progress in the table's
     consumer file at each epoch commit — retention then never expires
@@ -859,12 +875,14 @@ class PaimonStreamReader(DataSourceStreamReader):
 
     def __init__(self, options: dict):
         self.core = TableMeta(options["path"], options.get("branch"))
+        self.schema = self.core.schema().to_json()
         self.consumer = options.get("consumer-id") or options.get("consumer_id")
         self.starting = options.get("startingoffsets", options.get(
             "startingOffsets", "earliest"))
         # Paimon's scan.mode=from-snapshot: begin the stream AT a specific
         # snapshot id (inclusive) — the reproducible-replay startup a
-        # backfill pipeline wants. Exclusive with startingOffsets=latest.
+        # backfill pipeline wants. Exclusive with startingOffsets=latest;
+        # overrides a consumer's recorded position (Paimon's reset).
         self.from_snapshot = options.get("from-snapshot")
         if self.from_snapshot is not None:
             if str(self.starting).lower() == "latest":
@@ -873,12 +891,12 @@ class PaimonStreamReader(DataSourceStreamReader):
             self.from_snapshot = int(self.from_snapshot)
 
     def initialOffset(self) -> dict:
+        if self.from_snapshot is not None:
+            return {"snapshot": max(0, self.from_snapshot - 1)}
         if self.consumer:
             nxt = self.core.list_consumers().get(self.consumer)
             if nxt is not None:
                 return {"snapshot": nxt - 1}
-        if self.from_snapshot is not None:
-            return {"snapshot": max(0, self.from_snapshot - 1)}
         if str(self.starting).lower() == "latest":
             return self.latestOffset()
         return {"snapshot": 0}
@@ -889,135 +907,54 @@ class PaimonStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> Sequence[PaimonStreamPartition]:
         core = self.core
-        lo, hi = start["snapshot"], end["snapshot"]
-        producer = core.schema().options.get("changelog-producer")
-        all_ids = core.snapshot_ids()
+        lookup = self.schema["options"].get("changelog-producer") == "lookup"
+
+        def file(e: dict, positions=None):
+            return (os.path.join(core.path, e["path"]),
+                    core.schema(e["schema_id"]).to_json(), positions)
+
         parts: list[PaimonStreamPartition] = []
-        prev_paths: set[str] | None = None
-        prev_dv = core.snapshot(lo).dv_index if lo in all_ids else None
-
-        def writers(sids) -> dict[int, dict]:
-            return {sid: core.schema(sid).to_json() for sid in sids}
-
-        for sid in (i for i in all_ids if lo < i <= hi):
-            snap = core.snapshot(sid)
-            schema = core.schema(snap.schema_id).to_json()
-            entries = core.manifest_entries(snap)
-            if producer == "lookup":
-                if snap.changelog:
-                    parts.append(PaimonStreamPartition(
-                        "clg", schema, sid,
-                        clg_dir=os.path.join(
-                            core.meta_path, "changelog", snap.changelog),
-                    ))
-                prev_paths = {e["path"] for e in entries}
-                prev_dv = snap.dv_index
+        for c in core.changes(start["snapshot"], end["snapshot"]):
+            sid = c.snapshot.snapshot_id
+            if lookup:
+                if c.snapshot.changelog:
+                    d = os.path.join(core.meta_path, "changelog", c.snapshot.changelog)
+                    ws = core.schema(c.snapshot.schema_id).to_json()
+                    parts.append(PaimonStreamPartition(sid, self.schema, [
+                        (os.path.join(d, f), ws, None)
+                        for f in sorted(os.listdir(d))
+                        if f.startswith("part-") and f.endswith(".parquet")
+                    ]))
                 continue
-            if snap.commit_kind != "COMPACT":
-                if prev_paths is None:
-                    prev_paths = (
-                        {e["path"] for e in
-                         core.manifest_entries(core.snapshot(sid - 1))}
-                        if sid - 1 in all_ids
-                        else set()
-                    )
-                new = [e for e in entries if e["path"] not in prev_paths]
-                for e in new:
-                    parts.append(PaimonStreamPartition(
-                        "files", schema, sid,
-                        files=[(os.path.join(core.path, e["path"]),
-                                e["schema_id"])],
-                        writer_schemas=writers([e["schema_id"]]),
-                    ))
-                # deletion-vector diff: positions newly marked dead in this
-                # commit come back as D rows (lossless, like incremental_df)
-                dv = snap.dv_index
-                if dv and dv != prev_dv:
-                    diff = core.dv_positions(dv)
-                    if prev_dv:
-                        old = core.dv_positions(prev_dv)
-                        diff = {
-                            f: sorted(set(ps) - set(old.get(f, [])))
-                            for f, ps in diff.items()
-                        }
-                    by_schema: dict[str, tuple[int, list[int]]] = {}
-                    path_sid = {e["path"]: e["schema_id"] for e in entries}
-                    for f, ps in diff.items():
-                        if ps and f in path_sid:
-                            by_schema[os.path.join(core.path, f)] = (
-                                path_sid[f], ps)
-                    if by_schema:
-                        parts.append(PaimonStreamPartition(
-                            "dvdiff", schema, sid,
-                            positions=by_schema,
-                            writer_schemas=writers(
-                                {i for i, _ in by_schema.values()}),
-                        ))
-            prev_paths = {e["path"] for e in entries}
-            prev_dv = snap.dv_index
+            parts += [PaimonStreamPartition(sid, self.schema, [file(e)]) for e in c.added]
+            if c.deleted:
+                parts.append(PaimonStreamPartition(
+                    sid, self.schema, [file(e, ps) for e, ps in c.deleted]))
         return parts
 
     def read(self, partition: PaimonStreamPartition):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        schema = partition.schema
-        names = [f["name"] for f in schema["fields"]]
-        out_names = names + [_SEQ, _KIND]
-
-        def finalize(tbl, seq_default: int, kind_default: str):
-            n = tbl.num_rows
-            cols = []
-            for c in out_names:
-                if c in tbl.column_names:
-                    cols.append(tbl.column(c))
-                elif c == _SEQ:
-                    cols.append(pa.array([seq_default] * n, type=pa.int64()))
-                elif c == _KIND:
-                    cols.append(pa.array([kind_default] * n, type=pa.string()))
-                else:
-                    at = _arrow_type(
-                        next(f["type"] for f in schema["fields"] if f["name"] == c)
-                    )
-                    cols.append(pa.nulls(n, type=at or pa.string()))
-            tbl = pa.table(dict(zip(out_names, cols)))
-            return iter(_cast_to_schema(tbl, schema).to_batches(max_chunksize=4096))
-
-        if partition.mode == "clg":
-            files = [
-                os.path.join(partition.clg_dir, f)
-                for f in os.listdir(partition.clg_dir)
-                if f.startswith("part-") and f.endswith(".parquet")
-            ]
-            if not files:
-                return iter(())
-            tbl = pa.concat_tables(
-                [pq.read_table(f) for f in files], promote_options="permissive"
-            )
-            return finalize(tbl, partition.seq, "I")
-        if partition.mode == "dvdiff":
-            tables = []
-            for f, (sid, positions) in partition.positions.items():
-                t = _project_arrow(
-                    pq.read_table(f).take(positions),
-                    partition.writer_schemas[sid],
-                    schema,
-                )
-                tables.append(t.select([c for c in t.column_names if c in names]))
-            tbl = pa.concat_tables(tables, promote_options="permissive")
-            return finalize(tbl, partition.seq, "D")
-        tables = [
-            _project_arrow(
-                _read_arrow_file(f), partition.writer_schemas[sid], schema
-            )
-            for f, sid in partition.files
-        ]
+        names = [f["name"] for f in partition.schema["fields"]]
+        tables = []
+        for path, writer_schema, positions in partition.files:
+            t = _read_arrow_file(path)
+            if positions is not None:
+                # deleted rows: kind D, sequenced by the deleting commit
+                t = t.take(positions).drop_columns(
+                    [c for c in (_SEQ, _KIND) if c in t.column_names])
+            t = _project_arrow(t, writer_schema, partition.schema)
+            n = t.num_rows
+            if _SEQ not in t.column_names:
+                t = t.append_column(_SEQ, pa.array([partition.seq] * n, pa.int64()))
+            if _KIND not in t.column_names:
+                kind = "I" if positions is None else "D"
+                t = t.append_column(_KIND, pa.array([kind] * n, pa.string()))
+            tables.append(t.select(names + [_SEQ, _KIND]))
         if not tables:
             return iter(())
         tbl = pa.concat_tables(tables, promote_options="permissive")
-        if "__pos" in tbl.column_names:
-            tbl = tbl.drop_columns(["__pos"])
-        return finalize(tbl, partition.seq, "I")
+        return iter(_cast_to_schema(tbl, partition.schema).to_batches(max_chunksize=4096))
 
     def commit(self, end: dict) -> None:
         if self.consumer:

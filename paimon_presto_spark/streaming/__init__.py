@@ -1,11 +1,12 @@
-"""Structured Streaming over the table format's changelog.
+"""Structured Streaming over the table format's changes.
 
 The reference connector is batch-only (SURVEY §1.2: Paimon streaming
 options are exposed as table DDL passthrough but no streaming read exists
-in the connector). This package is the Spark-native extension: the table's
-immutable data files ARE a changelog (+I/-D row kinds with commit
-sequence), so ``readStream`` over the data directory yields exactly the
-stream a Paimon changelog scan would.
+in the connector). This package is the Spark-native extension:
+``changelog_stream`` is the ``format("paimon")`` stream reader, whose
+offsets are snapshot ids — each micro-batch streams the commits between
+two snapshots (the Structured Streaming offset contract), planned by the
+same ``TableMeta.changes`` that ``Table.incremental_df`` reads in batch.
 """
 
 from paimon_presto_spark.streaming.dedup import streaming_exact_dedup

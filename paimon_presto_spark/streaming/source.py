@@ -1,46 +1,35 @@
-"""Streaming source over a table's changelog.
+"""Streaming source over a table's changes.
 
-``changelog_stream`` returns a streaming DataFrame of the table's row-level
-changes: every committed data file is an immutable changelog segment, so
-Spark's file stream source (which tracks seen files in its own checkpoint)
-delivers each commit's rows exactly once. Primary-key tables carry
-``__row_kind`` ('I'/'D') and the commit sequence ``__seq`` — consumers can
-apply upserts downstream (the Paimon "changelog-producer = input" model).
-
-Scale notes: the file-stream source lists the data directory per
-micro-batch; ``maxFilesPerTrigger`` bounds batch size. For 100 TB tables
-the listing cost is bounded by partition-dir pruning — pass
-``subdir`` (e.g. ``__part_region=eu``) to stream one partition.
+``changelog_stream`` is the ``format("paimon")`` stream reader
+(``sources/datasource.PaimonStreamReader``) bound to a ``Table``: offsets
+are snapshot ids, and each micro-batch streams the commits in
+``(start, end]`` as planned by ``TableMeta.changes`` — the same change feed
+``Table.incremental_df`` reads in batch. COMPACT commits are skipped,
+deletion-vector deletes arrive as ``D`` rows, and tables with
+``changelog-producer=lookup`` stream their retraction changelog
+(I/UB/UA/D). Every row carries ``__row_kind`` and the commit sequence
+``__seq``, so consumers can apply upserts downstream (the Paimon
+"changelog-producer = input" model).
 """
 
 from __future__ import annotations
 
-import os
-
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from paimon_presto_spark.table import KIND_COL, POS_COL, SEQ_COL, Table, _parse_type
+from paimon_presto_spark import sources
+from paimon_presto_spark.table import SEQ_COL, Table
 
 
 def changelog_stream(
     spark: SparkSession,
     table: Table,
-    subdir: str | None = None,
-    max_files_per_trigger: int | None = None,
     starting_snapshot: int | None = None,
     consumer_id: str | None = None,
-    retraction: bool = False,
 ) -> DataFrame:
-    """Streaming DataFrame over `table`'s data files (changelog semantics).
-
-    Append-only tables yield their rows; primary-key tables additionally
-    carry ``__row_kind`` / ``__seq`` system columns. ``starting_snapshot``
-    is the Paimon ``scan.mode=from-snapshot`` startup mode: only changes
-    committed at or after that snapshot are delivered (rows filtered on the
-    commit sequence — earlier files are still listed once but contribute no
-    rows, and the checkpoint marks them done).
+    """Streaming DataFrame of `table`'s changes: its columns in the latest
+    schema plus ``__seq`` and ``__row_kind``. ``starting_snapshot`` is the
+    Paimon ``scan.mode=from-snapshot`` startup mode: only commits at or
+    after that snapshot are delivered.
 
     ``consumer_id`` is Paimon's consumer-id streaming mode: the stream
     resumes from the consumer's recorded ``next_snapshot`` (registering the
@@ -50,86 +39,30 @@ def changelog_stream(
     ``track_consumer`` on the sink side to advance the position as batches
     complete. Explicit ``starting_snapshot`` overrides the recorded
     position (Paimon's reset semantics).
-
-    ``retraction=True`` streams the table's lookup-producer changelog
-    instead of its data files: rows carry ``__row_kind`` ∈ {I, UB, UA, D}
-    (Paimon's +I/-U/+U/-D), so downstream aggregations can subtract
-    pre-images instead of re-reading state. Requires the table option
-    ``changelog-producer = lookup``.
     """
-    if retraction:
-        if table.schema().options.get("changelog-producer") != "lookup":
-            raise ValueError(
-                "retraction streaming requires changelog-producer=lookup"
-            )
-        schema = table.schema()
-        fields = [
-            T.StructField(f["name"], _parse_type(f["type"]), True)
-            for f in schema.fields
-        ] + [
-            T.StructField(KIND_COL, T.StringType(), True),
-            T.StructField(SEQ_COL, T.LongType(), True),
-        ]
-        clg_dir = os.path.join(table.meta_path, "changelog")
-        os.makedirs(clg_dir, exist_ok=True)
-        reader = (
-            spark.readStream.schema(T.StructType(fields))
-            .option("recursiveFileLookup", "true")
-            .option("pathGlobFilter", "part-*")  # skip _SUCCESS markers
-        )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        return reader.parquet(clg_dir)
-    if consumer_id is not None:
-        recorded = table.list_consumers().get(consumer_id)
-        if starting_snapshot is None and table.schema().primary_keys:
-            # append-only files carry no __seq: their resume point is
-            # Spark's own file-source checkpoint; the consumer still pins
-            # retention below
-            starting_snapshot = recorded
-        if recorded is None:
-            ids = table.snapshot_ids()
-            table.register_consumer(consumer_id, ids[0] if ids else 1)
-    schema = table.schema()
-    fields = [
-        T.StructField(f["name"], _parse_type(f["type"]), True) for f in schema.fields
-    ]
-    if schema.primary_keys:
-        fields += [
-            T.StructField(SEQ_COL, T.LongType(), True),
-            T.StructField(POS_COL, T.LongType(), True),
-            T.StructField(KIND_COL, T.StringType(), True),
-        ]
-    data_dir = os.path.join(table.path, "data")
-    if subdir:
-        data_dir = os.path.join(data_dir, subdir)
-    os.makedirs(data_dir, exist_ok=True)
-    reader = (
-        spark.readStream.schema(T.StructType(fields))
-        .option("recursiveFileLookup", "true")
-        # compaction rewrites are named cpt-*: NOT new data — excluding
-        # them keeps a 100 TB table's compact() from re-emitting the whole
-        # table into every streaming consumer (the batch-side counterpart
-        # is incremental_df skipping COMPACT commits)
-        .option("pathGlobFilter", "data-*")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    out = reader.parquet(data_dir)
-    if starting_snapshot is not None:
-        if not schema.primary_keys:
-            raise ValueError(
-                "starting_snapshot requires a primary-key table (append-only "
-                "files carry no commit sequence column)"
-            )
-        out = out.filter(F.col(SEQ_COL) >= starting_snapshot)
-    return out
+    if consumer_id is not None and consumer_id not in table.list_consumers():
+        ids = table.snapshot_ids()
+        table.register_consumer(consumer_id, ids[0] if ids else 1)
+    options = {
+        "path": table.path,
+        "branch": table.branch_name,
+        "changelog": "true",
+        "from-snapshot": starting_snapshot,
+        "consumer-id": consumer_id,
+    }
+    reader = sources.register_datasource(spark).readStream.format("paimon")
+    for k, v in options.items():
+        if v is not None:
+            reader = reader.option(k, str(v))
+    return reader.load()
 
 
 def track_consumer(table: Table, consumer_id: str, fn=None):
     """Wrap a ``foreachBatch`` function so the consumer position advances
     as micro-batches complete (Paimon consumer-id commit semantics: the
-    consumer file records the NEXT snapshot the reader needs).
+    consumer file records the NEXT snapshot the reader needs). The stream
+    reader itself acknowledges a batch only when the next run recovers
+    its checkpoint; this acknowledges at the end of each batch.
 
     The position moves to ``max(__seq) + 1`` over the batch — i.e. past
     every fully-processed commit — and only forward, so replays after a
@@ -153,8 +86,6 @@ def track_consumer(table: Table, consumer_id: str, fn=None):
     def commit_batch(batch_df, batch_id: int) -> None:
         if fn is not None:
             fn(batch_df, batch_id)
-        if SEQ_COL not in batch_df.columns:
-            return  # append-only stream: no commit sequence to track
         top = batch_df.agg(_F.max(SEQ_COL).alias("m")).collect()[0]["m"]
         if top is None:
             return

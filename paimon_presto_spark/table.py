@@ -1441,21 +1441,20 @@ class Table(TableMeta):
             if end_snapshot is not None
             else (self.snapshot().snapshot_id if self.snapshot() else 0)
         )
-        names = []
-        for sid in self.snapshot_ids():
-            if start_snapshot < sid <= end:
-                snap = self.snapshot(sid)
-                if snap.changelog:
-                    names.append(snap.changelog)
         schema = self.schema()
         out = None
-        for name in names:
-            part = self.spark.read.parquet(
-                os.path.join(self.meta_path, "changelog", name)
-            )
-            out = part if out is None else out.unionByName(
-                part, allowMissingColumns=True
-            )
+        for c in self.changes(start_snapshot, end):
+            if c.snapshot.changelog:
+                # changelog files keep their commit's schema: project by
+                # field id, as data files are
+                part = _project_to(
+                    self.spark.read.parquet(
+                        os.path.join(self.meta_path, "changelog", c.snapshot.changelog)
+                    ),
+                    self.schema(c.snapshot.schema_id), schema, keep_sys=False,
+                    extra=[KIND_COL, SEQ_COL],
+                )
+                out = part if out is None else out.unionByName(part)
         if out is None:
             fields = [
                 T.StructField(f["name"], _parse_type(f["type"]), True)
@@ -1465,17 +1464,7 @@ class Table(TableMeta):
                 T.StructField(SEQ_COL, T.LongType(), True),
             ]
             return self.spark.createDataFrame([], T.StructType(fields))
-        # project to the current schema (changelog files keep their writer
-        # schema; added columns null-pad by name)
-        cols = [
-            (
-                F.col(f["name"]).cast(_parse_type(f["type"]))
-                if f["name"] in out.columns
-                else F.lit(None).cast(_parse_type(f["type"]))
-            ).alias(f["name"])
-            for f in schema.fields
-        ]
-        return out.select(*cols, F.col(KIND_COL), F.col(SEQ_COL))
+        return out
 
     def ro_df(self) -> DataFrame:
         """Read-optimized read (Paimon's ``$ro`` system table): serve the
@@ -1800,8 +1789,8 @@ class Table(TableMeta):
         (Paimon's incremental-between-tags): "the changes between release
         tags" is the reproducible-diff question a corpus pipeline asks.
 
-        Walks the commits in the range and unions each commit's NEW files
-        (manifest diff against its parent), skipping COMPACT commits —
+        Plans the range with ``TableMeta.changes`` and unions each commit's
+        NEW files (manifest diff against its parent), skipping COMPACT commits —
         rewrites are not new data, so incremental consumers never see a
         compaction re-emit the table. Deletion-vector tables additionally
         re-read the positions each commit marked deleted and emit them as
@@ -1822,52 +1811,8 @@ class Table(TableMeta):
         )
         if start_snapshot > end:
             raise ValueError(f"start {start_snapshot} > end {end}")
-        ids = [i for i in self.snapshot_ids() if start_snapshot < i <= end]
-        new_entries: list[dict] = []
-        dv_added: list[DataFrame] = []  # (path,pos) marked deleted in range
-        path_entry: dict[str, dict] = {}  # any manifest entry per file path
-        def resolve(sid: int) -> Snapshot | None:
-            """A snapshot by id, or — after expiry — any TAG pinning it
-            (the tag file carries the full payload, so tag-bounded
-            incremental reads keep working once history is expired)."""
-            if sid in self.snapshot_ids():
-                return self.snapshot(sid)
-            for name in self.list_tags():
-                pinned = self.tag_snapshot(name)
-                if pinned.snapshot_id == sid:
-                    return pinned
-            return None
-
-        prev_paths: set[str] | None = None
-        prev_dv: str | None = None
-        start_resolved = resolve(start_snapshot) if ids else None
-        if start_resolved is not None:
-            prev_dv = start_resolved.dv_index
-        for sid in ids:
-            snap = self.snapshot(sid)
-            cur = self.manifest_entries(snap)
-            for e in cur:
-                path_entry.setdefault(e["path"], e)
-            if snap.commit_kind != "COMPACT":
-                if prev_paths is None:
-                    parent = resolve(sid - 1)
-                    prev_paths = (
-                        {e["path"] for e in self.manifest_entries(parent)}
-                        if parent is not None
-                        else set()
-                    )
-                new_entries += [e for e in cur if e["path"] not in prev_paths]
-                if snap.dv_index and snap.dv_index != prev_dv:
-                    step = self.dv_df(snap)
-                    if prev_dv:
-                        step = step.exceptAll(
-                            self.spark.read.parquet(
-                                os.path.join(self._dv_root(), prev_dv)
-                            )
-                        )
-                    dv_added.append(step)
-            prev_paths = {e["path"] for e in cur}
-            prev_dv = snap.dv_index
+        changes = self.changes(start_snapshot, end)
+        deleted = [(e, ps) for c in changes for e, ps in c.deleted]
         schema = self.schema()
         spark = self.spark
         # stable output schema per table: DV-enabled append tables always
@@ -1904,7 +1849,7 @@ class Table(TableMeta):
 
         data_names = schema.field_names()
         out = None
-        inserts = _read_group(new_entries)
+        inserts = _read_group([e for c in changes for e in c.added])
         if inserts is not None:
             if KIND_COL in inserts.columns:
                 kind = F.concat(
@@ -1916,27 +1861,25 @@ class Table(TableMeta):
                 out = inserts.select(F.lit("+I").alias("rowkind"), *data_names)
             else:
                 out = inserts
-        if dv_added:
-            added = dv_added[0]
-            for d in dv_added[1:]:
-                added = added.unionByName(d)
-            added = added.distinct()
+        if deleted:
             # rows a DV commit deleted still exist in their (immutable)
             # files — re-read exactly those positions for the -D payload
-            paths = [r["path"] for r in added.select("path").distinct().collect()]
-            touched = _read_group([path_entry[p] for p in paths if p in path_entry],
+            touched = _read_group(list({e["path"]: e for e, _ in deleted}.values()),
                                   extra=[DV_PATH_COL, DV_POS_COL])
-            if touched is not None:
-                deletes = (
-                    touched.join(
-                        F.broadcast(added),
-                        on=(touched[DV_PATH_COL] == added["path"])
-                        & (touched[DV_POS_COL] == added["pos"]),
-                        how="left_semi",
-                    )
-                    .select(F.lit("-D").alias("rowkind"), *data_names)
+            dead = spark.createDataFrame(
+                [(e["path"], p) for e, ps in deleted for p in ps],
+                "path string, pos long",
+            )
+            deletes = (
+                touched.join(
+                    F.broadcast(dead),
+                    on=(touched[DV_PATH_COL] == dead["path"])
+                    & (touched[DV_POS_COL] == dead["pos"]),
+                    how="left_semi",
                 )
-                out = deletes if out is None else out.unionByName(deletes)
+                .select(F.lit("-D").alias("rowkind"), *data_names)
+            )
+            out = deletes if out is None else out.unionByName(deletes)
         if out is None:
             base = schema.spark_schema()
             if emit_kind:

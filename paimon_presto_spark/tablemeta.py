@@ -147,6 +147,18 @@ class Snapshot:
         return self.__dict__.copy()
 
 
+@dataclass
+class Change:
+    """What one commit changed (``TableMeta.changes``): its snapshot (whose
+    ``changelog`` names its lookup changelog), the data files it added, and
+    the rows it newly marked deleted in the deletion-vector index, as
+    (manifest entry, row positions) per file."""
+
+    snapshot: Snapshot
+    added: list[dict]
+    deleted: list[tuple[dict, list[int]]]
+
+
 class TableMeta:
     """One lineage of a table's metadata: schemas, snapshots, manifests,
     tags, consumers, retention and the commit protocol — no SparkSession.
@@ -400,6 +412,51 @@ class TableMeta:
             "after_stats_skip": len(entries),
         }
 
+    def changes(self, start: int, end: int) -> list[Change]:
+        """The changes committed in snapshots ``(start, end]``: one
+        ``Change`` per commit, COMPACT commits skipped (a rewrite is not new
+        data). Each commit is diffed against its parent, on metadata alone:
+        manifest paths for the added files, ``dv_positions`` for the newly
+        deleted rows. A parent that has been expired resolves through a tag
+        pinning it; with neither, the commit's whole listing counts as new.
+        The one change planner behind ``Table.incremental_df``,
+        ``Table.changelog_df`` and the ``format("paimon")`` stream reader."""
+        all_ids = self.snapshot_ids()
+        ids = [i for i in all_ids if start < i <= end]
+        if not ids:
+            return []
+        parent = ids[0] - 1
+        if parent in all_ids:
+            prev = self.snapshot(parent)
+        else:
+            prev = next(
+                (s for s in map(self.tag_snapshot, self.list_tags())
+                 if s.snapshot_id == parent),
+                None,
+            )
+        out = []
+        for sid in ids:
+            snap = self.snapshot(sid)
+            if snap.commit_kind != "COMPACT":
+                entries = self.manifest_entries(snap)
+                before = (
+                    {e["path"] for e in self.manifest_entries(prev)} if prev else set()
+                )
+                was = prev.dv_index if prev else None
+                deleted = []
+                if snap.dv_index and snap.dv_index != was:
+                    old = self.dv_positions(was)
+                    by_path = {e["path"]: e for e in entries}
+                    for p, ps in self.dv_positions(snap.dv_index).items():
+                        new = sorted(set(ps) - set(old.get(p, ())))
+                        if new and p in by_path:
+                            deleted.append((by_path[p], new))
+                out.append(Change(
+                    snap, [e for e in entries if e["path"] not in before], deleted
+                ))
+            prev = snap
+        return out
+
     # -- consumers: streaming-reader progress pins (Paimon consumer-id) ----
 
     def _consumer_path(self, name: str) -> str:
@@ -622,7 +679,7 @@ class TableMeta:
             live |= files
             live_dv |= index
             # manifests of commits that never claimed a snapshot, and the
-            # temporary file of an interrupted LATEST swap
+            # temporary files of an interrupted snapshot claim or LATEST swap
             for sub, dead in (
                 ("manifest", lambda fn: fn not in live_manifests),
                 ("snapshot", lambda fn: fn.startswith(".")),
@@ -831,18 +888,22 @@ class TableMeta:
         return list_name
 
     def _publish(self, snap: Snapshot) -> None:
-        """Claim ``snapshot-<id>.json``: O_EXCL-create it (CommitConflict
-        when a concurrent commit holds the id) with its payload written in
-        one call, then move the LATEST hint."""
-        spath = os.path.join(
-            self.meta_path, "snapshot", f"snapshot-{snap.snapshot_id}.json"
-        )
+        """Claim ``snapshot-<id>.json``: write the payload to a temporary
+        file, then hard-link it to the snapshot name (CommitConflict when a
+        concurrent commit holds the id), then move the LATEST hint. The
+        link appears with its payload complete, so a crash never leaves an
+        empty snapshot file; ``remove_orphan_files`` reclaims a stranded
+        temporary file."""
+        sdir = os.path.join(self.meta_path, "snapshot")
+        tmp = os.path.join(sdir, f".snapshot-{snap.snapshot_id}.{uuid.uuid4().hex}")
+        with open(tmp, "w") as fh:
+            fh.write(json.dumps(snap.to_json()))
         try:
-            fd = os.open(spath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.link(tmp, os.path.join(sdir, f"snapshot-{snap.snapshot_id}.json"))
         except FileExistsError as exc:  # concurrent commit won this id
             raise CommitConflict(str(exc)) from exc
-        with os.fdopen(fd, "w") as fh:
-            fh.write(json.dumps(snap.to_json()))
+        finally:
+            os.remove(tmp)
         self._write_latest(snap.snapshot_id)
 
     def _write_latest(self, snapshot_id: int) -> None:

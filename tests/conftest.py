@@ -64,6 +64,7 @@ _SLOW_FILES = {
     "tests/test_colocated_property.py",       #  41 s
     "tests/test_r7_property.py",              #  25 s
     "tests/test_quantile_property.py",        #  20 s
+    "tests/test_change_feed_property.py",     #  50 s
 }
 
 # individual tests ≥ 5 s outside those files (measured call+setup seconds)
@@ -116,3 +117,38 @@ def pytest_collection_modifyitems(config, items):
         path = item.nodeid.split("::")[0]
         if path in _SLOW_FILES or item.nodeid in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    stale = _stale_ledger_entries(config, items)
+    if stale:
+        raise pytest.UsageError(
+            "slow-test ledger entries match no collected test (renamed or "
+            "deleted? update tests/conftest.py): " + ", ".join(stale)
+        )
+
+
+def _stale_ledger_entries(config, items) -> list[str]:
+    """Ledger entries whose file this run collected whole (a file or
+    directory argument, not a ``file::test`` one) but that match no
+    collected test. A file entry also goes stale when its file is gone.
+    Files that failed to import are not judged."""
+    root = config.rootpath
+    whole = [
+        (config.invocation_params.dir / a).resolve()
+        for a in config.args
+        if "::" not in a
+    ]
+    ids = {item.nodeid for item in items}
+    files = {nodeid.split("::")[0] for nodeid in ids}
+
+    def judged(path: str) -> bool:
+        p = (root / path).resolve()
+        return any(p == w or w in p.parents for w in whole)
+
+    return sorted(
+        [f for f in _SLOW_FILES if judged(f) and not (root / f).exists()]
+        + [
+            e
+            for e in _SLOW_TESTS
+            if e.split("::")[0] in files and judged(e.split("::")[0])
+            and e not in ids
+        ]
+    )

@@ -208,15 +208,27 @@ def _inject(monkeypatch, step):
             raise _Crash(step)
 
         monkeypatch.setattr(tablemeta.TableMeta, "_write_manifest", write_manifest)
+    elif step == "snapshot_write":
+
+        class _Json:  # the snapshot payload's serialization fails
+            def __getattr__(self, name):
+                return getattr(json, name)
+
+            def dumps(self, obj, **kw):
+                if "commit_kind" in obj:
+                    raise _Crash(step)
+                return json.dumps(obj, **kw)
+
+        monkeypatch.setattr(tablemeta, "json", _Json())
     elif step == "snapshot_create":
-        real_open = os.open
+        real_link = os.link
 
-        def open_(path, flags, *a):
-            if os.path.basename(path).startswith("snapshot-") and flags & os.O_EXCL:
+        def link(src, dst, *a, **kw):
+            if os.path.basename(dst).startswith("snapshot-"):
                 raise _Crash(step)
-            return real_open(path, flags, *a)
+            return real_link(src, dst, *a, **kw)
 
-        monkeypatch.setattr(tablemeta.os, "open", open_)
+        monkeypatch.setattr(tablemeta.os, "link", link)
     else:
         assert step == "latest_swap"
 
@@ -227,7 +239,8 @@ def _inject(monkeypatch, step):
 
 
 @pytest.mark.parametrize(
-    "step", ["data_rename", "manifest_write", "snapshot_create", "latest_swap"]
+    "step",
+    ["data_rename", "manifest_write", "snapshot_write", "snapshot_create", "latest_swap"],
 )
 @pytest.mark.parametrize("front", ["api", "datasource"])
 def test_crash_at_each_commit_step(registered, spark, catalog, monkeypatch, front, step):

@@ -188,6 +188,47 @@ def test_read_aggregation_engine(registered, spark, catalog):
     assert got == {1: 15, 2: 1}
 
 
+@pytest.mark.parametrize("reader", ["api", "datasource"])
+def test_aggregation_all_null_sum_stays_null(registered, spark, catalog, reader):
+    """A key whose every ``sum`` input is NULL merges to NULL, not 0,
+    through both readers."""
+    t = catalog.create_table(
+        "default", f"ds_agn_{reader}", "k int, s int", primary_keys=["k"],
+        options={"merge-engine": "aggregation",
+                 "fields.s.aggregate-function": "sum"},
+    )
+    t.upsert(spark.createDataFrame([(1, None), (2, 3)], "k int, s int"))
+    t.upsert(spark.createDataFrame([(1, None), (2, None)], "k int, s int"))
+    df = t.to_df() if reader == "api" else _read(spark, t)
+    assert {r["k"]: r["s"] for r in df.collect()} == {1: None, 2: 3}
+
+
+@pytest.mark.parametrize("reader", ["api", "datasource"])
+def test_aggregate_functions_outside_the_arrow_merge(
+    registered, spark, catalog, reader
+):
+    """The aggregate functions only ``Table.to_df`` merges: the DataSource
+    read fails at planning with a ValueError naming the function."""
+    for fn, ddl, v in (
+        ("first_value", "int", 1), ("last_value", "int", 1),
+        ("first_non_null", "int", 1), ("bool_and", "boolean", True),
+        ("bool_or", "boolean", True), ("product", "int", 2),
+        ("listagg", "string", "a"),
+    ):
+        t = catalog.create_table(
+            "default", f"ds_agf_{reader}_{fn}", f"k int, x {ddl}",
+            primary_keys=["k"],
+            options={"merge-engine": "aggregation",
+                     "fields.x.aggregate-function": fn},
+        )
+        t.upsert(spark.createDataFrame([(1, v)], f"k int, x {ddl}"))
+        if reader == "api":
+            assert [tuple(r) for r in t.to_df().collect()] == [(1, v)]
+        else:
+            with pytest.raises(Exception, match=f"ValueError.*'{fn}'"):
+                _read(spark, t).collect()
+
+
 def test_datasource_branch_read_and_write(registered, spark, catalog):
     """option("branch", name): the DataSource reads and writes a branch
     lineage while sharing data files with main (same split planning,

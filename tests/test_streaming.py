@@ -44,10 +44,9 @@ def test_changelog_stream_across_commits(spark, catalog, tmp_path):
 
 
 def test_changelog_stream_skips_compaction(spark, catalog, tmp_path):
-    """compact() rewrites every row into fresh files — a naive file stream
-    would re-emit the whole table. The cpt-* naming + glob filter keeps
-    rewrites invisible to streaming consumers (mirror of incremental_df
-    skipping COMPACT commits)."""
+    """compact() rewrites every row into fresh files; the stream skips
+    COMPACT commits (the same change planner as incremental_df), so a
+    rewrite never re-emits the table to streaming consumers."""
     t = catalog.create_table("default", "chgc", "k int, v string", primary_keys=["k"])
     t.upsert(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
     t.delete(spark.createDataFrame([(1, "a")], "k int, v string"))
@@ -67,6 +66,54 @@ def test_changelog_stream_skips_compaction(spark, catalog, tmp_path):
     assert sorted((r["k"], r["v"]) for r in t.to_df().collect()) == [
         (2, "b"), (3, "c")
     ]
+
+
+def _changes(spark, name, t, tmp_path):
+    _run_to_memory(changelog_stream(spark, t), name, tmp_path)
+    return sorted(tuple(r) for r in spark.table(name).collect())
+
+
+def test_changelog_stream_across_schema_changes(spark, catalog, tmp_path):
+    """Every commit streams in the latest schema, projected by field id:
+    a renamed column keeps its values, an added one is NULL in older
+    commits."""
+    t = catalog.create_table("default", "chg_evo", "k int, v string", primary_keys=["k"])
+    t.upsert(spark.createDataFrame([(1, "a")], "k int, v string"))
+    catalog.rename_column("default", "chg_evo", "v", "w")
+    t.upsert(spark.createDataFrame([(2, "b")], "k int, w string"))
+    catalog.add_column("default", "chg_evo", "n", "int")
+    t.upsert(spark.createDataFrame([(3, "c", 7)], "k int, w string, n int"))
+    assert _changes(spark, "chg_evo_out", t, tmp_path) == [
+        (1, "a", None, 1, "I"), (2, "b", None, 2, "I"), (3, "c", 7, 3, "I"),
+    ]
+
+
+def test_changelog_stream_reads_avro_tables(spark, catalog, tmp_path):
+    t = catalog.create_table(
+        "default", "chg_avro", "k int, v string", primary_keys=["k"],
+        options={"file.format": "avro"},
+    )
+    t.upsert(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    t.delete(spark.createDataFrame([(1, "a")], "k int, v string"))
+    assert _changes(spark, "chg_avro_out", t, tmp_path) == [
+        (1, "a", 1, "I"), (1, "a", 2, "D"), (2, "b", 1, "I"),
+    ]
+
+
+def test_crashed_commit_streams_nothing(spark, catalog, tmp_path, monkeypatch):
+    """A commit that crashed writing its manifest moved its data file into
+    data/ but never claimed a snapshot: the stream, like every reader,
+    shows none of it."""
+    from test_commit_core import _Crash, _inject
+
+    t = catalog.create_table("default", "chg_crash", "k int, v string", primary_keys=["k"])
+    t.upsert(spark.createDataFrame([(1, "a")], "k int, v string"))
+    with monkeypatch.context() as m:
+        _inject(m, "manifest_write")
+        with pytest.raises(_Crash):
+            t.upsert(spark.createDataFrame([(2, "ghost")], "k int, v string"))
+    assert [tuple(r) for r in t.to_df().collect()] == [(1, "a")]
+    assert _changes(spark, "chg_crash_out", t, tmp_path) == [(1, "a", 1, "I")]
 
 
 def test_tumbling_window_streaming(spark, tmp_path):
@@ -338,8 +385,9 @@ def test_consumer_id_streaming(spark, catalog, tmp_path):
 
 
 def test_retraction_stream(spark, catalog, tmp_path):
-    """retraction=True streams the lookup-producer changelog: UB/UA pairs
-    let a downstream consumer subtract pre-images instead of re-reading."""
+    """A changelog-producer=lookup table streams its lookup changelog:
+    UB/UA pairs let a downstream consumer subtract pre-images instead of
+    re-reading."""
     t = catalog.create_table(
         "default", "retr", "k int, v string", primary_keys=["k"],
         options={"changelog-producer": "lookup"},
@@ -349,7 +397,7 @@ def test_retraction_stream(spark, catalog, tmp_path):
     t.upsert(spark.createDataFrame([(1, "a2")], ddl))
     t.delete(spark.createDataFrame([(2, "b")], ddl))
 
-    sdf = changelog_stream(spark, t, retraction=True)
+    sdf = changelog_stream(spark, t)
     _run_to_memory(sdf, "retr_out", tmp_path)
     rows = [
         (r["k"], r["v"], r["__row_kind"], r["__seq"])
@@ -361,11 +409,6 @@ def test_retraction_stream(spark, catalog, tmp_path):
         (1, "a2", "UA", 2), (1, "a", "UB", 2),
         (2, "b", "D", 3),
     ]
-
-    # plain-table streams reject retraction mode
-    t2 = catalog.create_table("default", "retr2", "k int", primary_keys=["k"])
-    with pytest.raises(ValueError, match="lookup"):
-        changelog_stream(spark, t2, retraction=True)
 
 
 def test_lookup_join_refreshes_dimension(spark, catalog, tmp_path):
